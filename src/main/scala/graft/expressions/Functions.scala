@@ -44,6 +44,8 @@ object Functions {
       (exprs: Seq[Expression]) => SimHashBits(exprs.head, litInt(exprs(1), "simhash_bits", "bits"))),
     ("dot_product", classOf[DotProduct],
       (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1))),
+    ("cross_correlate", classOf[CrossCorrelate],
+      (exprs: Seq[Expression]) => CrossCorrelate(exprs.head, exprs(1))),
     ("argmax_pack", classOf[ArgMaxPack],
       (exprs: Seq[Expression]) => ArgMaxPack(exprs.head, exprs(1), litInt(exprs(2), "argmax_pack", "labelBits"))),
     ("normalize_text", classOf[NormalizeText],

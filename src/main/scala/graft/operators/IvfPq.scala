@@ -236,6 +236,24 @@ object IvfPq {
       array(codeCols: _*).as("codes")) ++ keep.map(col): _*)
   }
 
+  /** The coarse codebook as driver-local (cluster, centroid) pairs sorted
+    * by cluster, when it fits the `driverCodebookMaxDoubles` budget and
+    * every row is a non-null `dim`-long centroid; None sends [[search]]'s
+    * probe selection to the join+window fallback. */
+  private[graft] def localCoarse(queries: DataFrame, model: Model): Option[Array[(Int, Array[Double])]] = {
+    // clamped into [0, Int.MaxValue - 1]: a large budget over a small dim
+    // overflows Int, and limit() rejects the negative row count
+    val budgetRows = math.max(0L, math.min(
+      Quantize.driverCodebookMaxDoubles(queries) / math.max(1, model.dim), Int.MaxValue - 1L)).toInt
+    val probeRows = model.coarse.select("cluster", "c_centroid")
+      .limit(budgetRows + 1).collect()
+    val clean = probeRows.length <= budgetRows && probeRows.nonEmpty &&
+      probeRows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
+        r.getSeq[Double](1).length == model.dim)
+    if (clean) Some(probeRows.map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1))
+    else None
+  }
+
   /** Probe search: per query, rank coarse centroids by squared L2 and keep
     * the best `nprobe`; per probed cluster build the asymmetric-distance
     * table over the RESIDUAL query (q − cluster centroid); candidates are
@@ -257,16 +275,8 @@ object IvfPq {
     // join+window fallback below, which remains for codebooks past the
     // budget or carrying null/ragged centroids (whose null-first window
     // ranking the expression deliberately does not reproduce).
-    val budgetRows = (Quantize.driverCodebookMaxDoubles(queries) /
-      math.max(1, model.dim)).toInt
-    val probeRows = model.coarse.select("cluster", "c_centroid")
-      .limit(budgetRows + 1).collect()
-    val cleanLocal = probeRows.length <= budgetRows && probeRows.nonEmpty &&
-      probeRows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
-        r.getSeq[Double](1).length == model.dim)
-    val probes =
-      if (cleanLocal) {
-        val cents = probeRows.map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+    val probes = localCoarse(queries, model) match {
+      case Some(cents) =>
         val centMap = map_from_arrays(
           typedLit(cents.map(_._1).toSeq),
           typedLit(cents.map(_._2.toSeq).toSeq))
@@ -275,14 +285,14 @@ object IvfPq {
             col("q_vec"), cents.map(_._2), cents.map(_._1), nprobe)))
           .withColumn("c_centroid", element_at(centMap, col("cluster")))
           .select(col("q_id"), col("q_vec"), col("cluster"), col("c_centroid"))
-      } else {
+      case None =>
         val pw = w.partitionBy("q_id").orderBy(col("cd2").asc, col("cluster").asc)
         qvecs.join(broadcast(model.coarse))
           .withColumn("cd2", Quantize.sqDist(col("q_vec"), col("c_centroid")))
           .withColumn("pr", row_number().over(pw))
           .filter(col("pr") <= nprobe)
           .select(col("q_id"), col("q_vec"), col("cluster"), col("c_centroid"))
-      }
+    }
     // probes is read twice (the ADC-table chain and the candidate join)
     // and its producer includes the CALLER's whole queries plan — a lazy
     // barrier, bounded by queries × nprobe rows, runs that plan once

@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+
+import graft.expressions.CrossCorrelate
 
 /** Template-matching time-of-arrival estimation — the reference's §5
   * "times-of-arrival … computed using PSRCHIVE" step (README
@@ -25,29 +28,26 @@ import org.apache.spark.sql.functions._
   * arrays (nbin is 10²–10³ in practice) — the O(nbin²) lag scan rides
   * the ROW count, not corpus bytes, and fuses into the scan projection;
   * the template side is a broadcast (one profile per source). No
-  * shuffle beyond whatever built the binned profiles. The HOF lambdas
-  * run interpreted, same trade as `Signal.alignShift` (nbin-sized
-  * arrays per row; the profile binning itself stays codegen'd).
+  * shuffle beyond whatever built the binned profiles. The lag scan is
+  * the native `CrossCorrelate` expression: one codegen'd primitive
+  * double loop per row, no per-element lambda dispatch.
   *
-  * Determinism: the lag fold accumulates strictly in bin order
-  * (`aggregate` is a left fold), products/sums are per-row IEEE doubles
-  * — bit-identical across engines and partitionings, which is what lets
-  * q127 carry a full DuckDB oracle where the reference needs an
-  * external fit tool.
+  * Determinism: each lag is a left fold from 0.0 that adds the products
+  * strictly in bin order (`acc = acc + p·t`, j ascending, in both the
+  * codegen'd and interpreted paths); products/sums are per-row IEEE
+  * doubles — bit-identical across engines and partitionings, which is
+  * what lets q127 carry a full DuckDB oracle where the reference needs
+  * an external fit tool.
   */
 object Toa {
 
   /** Circular cross-correlation over all integer lags:
     * `ccf[k] = Σ_j profile[(j+k) mod n] · template[j]`, j ascending —
     * a left fold from 0.0 so the oracle's explicit `0.0 + t0 + t1 + …`
-    * chain reproduces it bitwise. */
-  def crossCorrelate(profile: Column, template: Column): Column = {
-    val n = size(template)
-    transform(sequence(lit(0), n - lit(1)), k =>
-      aggregate(sequence(lit(0), n - lit(1)), lit(0.0), (acc, j) =>
-        acc + element_at(profile, pmod(j + k, n) + lit(1)) *
-          element_at(template, j + lit(1))))
-  }
+    * chain reproduces it bitwise. Null/NaN/length edges are those of
+    * [[graft.expressions.CrossCorrelate]]. */
+  def crossCorrelate(profile: Column, template: Column): Column =
+    Bridge.column(CrossCorrelate(Bridge.expression(profile), Bridge.expression(template)))
 
   /** 0-based first-argmax lag of a CCF array (ties → smallest lag, the
     * order both engines' position-of-max primitives return). */

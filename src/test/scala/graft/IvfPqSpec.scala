@@ -112,6 +112,32 @@ class IvfPqSpec extends SparkSpec {
     assert(literal.nonEmpty)
   }
 
+  test("search: a driverCodebookMaxDoubles past Int range keeps the literal probe path") {
+    // 2^32 doubles over dim 2 is 2^31 budget rows, one past Int.MaxValue:
+    // the row budget must clamp, not wrap to Int.MinValue and make
+    // limit() throw
+    val corpus2 = (0 until 40).map { i =>
+      val c = i % 4
+      (i.toLong, Array(if (c % 2 == 0) 10.0f else 0.0f, if (c / 2 == 0) 10.0f else 0.0f)
+        .zipWithIndex.map { case (v, d) => v + ((i * 7 + d * 3) % 5) * 0.01f })
+    }.toDF("vec_id", "embedding")
+    val model = IvfPq.train(corpus2, "vec_id", "embedding", dim = 2, nlist = 4, m = 2, k = 4, iters = 2)
+    val encoded = IvfPq.encode(corpus2, "vec_id", "embedding", model)
+    val queries = corpus2.filter($"vec_id" < 10L)
+    def run() = IvfPq.search(queries, encoded, model, "vec_id", "embedding", nprobe = 2, k = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    assert(IvfPq.localCoarse(queries, model).isDefined)
+    val default = run()
+    assert(default.nonEmpty)
+    Seq(1L << 32, Long.MaxValue).foreach { budget =>
+      spark.conf.set("spark.graft.quantize.driverCodebookMaxDoubles", budget.toString)
+      try {
+        assert(IvfPq.localCoarse(queries, model).isDefined, s"budget $budget left the literal probe path")
+        assert(run() == default, s"budget $budget")
+      } finally spark.conf.unset("spark.graft.quantize.driverCodebookMaxDoubles")
+    }
+  }
+
   // test-local exact squared L2 (Quantize.sqDist is package-private; an
   // interpreted HOF fold is fine at spec scale)
   private def sqD2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {

@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 import graft.expressions.{MinHashSig, SimHashBits, WordShingles}
 import graft.functions.TextFns
+import graft.operators.Toa
 
 /** Randomized parity: each native expression must be value-identical to
   * the builtin composition it replaced (which is what the DuckDB oracles
@@ -171,6 +174,7 @@ class NativeExprParitySpec extends SparkSpec {
         "minhash_sig(word_shingles(text, 3), 8) AS sig",
         "simhash_bits(split(text, ' '), 16) AS sim",
         "dot_product(va, vb) AS dp",
+        "cross_correlate(va, vb) AS ccf",
         "argmax_pack(0.5D, 3, 4) AS packed",
         "kepler_solve(1.5D, 0.3D) AS e")
       .head()
@@ -178,21 +182,118 @@ class NativeExprParitySpec extends SparkSpec {
       Seq("alpha beta gamma", "beta gamma delta"))
     assert(row.getAs[scala.collection.Seq[String]]("sig").length == 8)
     assert(row.getAs[Double]("dp") == 11.0)
+    assert(row.getAs[scala.collection.Seq[Double]]("ccf") == Seq(11.0, 10.0))
     // parity with the Column-API builders
     val viaCols = Seq(("alpha beta gamma delta", Array(1.0, 2.0), Array(3.0, 4.0)))
       .toDF("text", "va", "vb")
       .select(
         MinHashSig.of(TextFns.shingles(col("text"), 3), 8).as("sig"),
-        graft.expressions.DotProduct.of(col("va"), col("vb")).as("dp"))
+        graft.expressions.DotProduct.of(col("va"), col("vb")).as("dp"),
+        Toa.crossCorrelate(col("va"), col("vb")).as("ccf"))
       .head()
     assert(row.getAs[scala.collection.Seq[String]]("sig") ==
       viaCols.getAs[scala.collection.Seq[String]]("sig"))
     assert(row.getAs[Double]("dp") == viaCols.getAs[Double]("dp"))
+    assert(row.getAs[scala.collection.Seq[Double]]("ccf") ==
+      viaCols.getAs[scala.collection.Seq[Double]]("ccf"))
 
     // width args must be literals — a column reference is a loud error
     val err2 = intercept[Exception] {
       Seq((3, "a b c d")).toDF("n", "text").selectExpr("word_shingles(text, n)").collect()
     }
     assert(err2.getMessage.contains("integer literal"))
+  }
+
+  /** The transform/aggregate lag fold `Toa.crossCorrelate` used before
+    * the native kernel — kept here as its reference. */
+  private def hofCcf(profile: Column, template: Column): Column = {
+    val n = size(template)
+    transform(sequence(lit(0), n - lit(1)), k =>
+      aggregate(sequence(lit(0), n - lit(1)), lit(0.0), (acc, j) =>
+        acc + element_at(profile, pmod(j + k, n) + lit(1)) *
+          element_at(template, j + lit(1))))
+  }
+
+  /** Runs `body` once compiled (whole-stage codegen, no interpreted
+    * fallback) and once interpreted (`eval`), unsetting both confs after. */
+  private def inBothCodegenModes(body: String => Unit): Unit =
+    Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach { case (mode, wholeStage) =>
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try body(mode)
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+
+  private val ccfSchema = StructType(Seq(StructField("id", IntegerType),
+    StructField("p", ArrayType(DoubleType)), StructField("t", ArrayType(DoubleType))))
+
+  /** An RDD-backed frame, so the projection really runs in the chosen
+    * mode (a local relation would be folded by the optimizer's
+    * interpreted projection). Arrays may be null or hold nulls. */
+  private def ccfFrame(rows: Seq[(Int, Seq[Any], Seq[Any])]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, p, t) => Row(i, p, t) }, 2), ccfSchema)
+
+  /** id → lags as raw IEEE bits (None = null array, inner None = null lag). */
+  private def ccfBits(df: DataFrame, ccf: Column): Map[Int, Option[Seq[Option[Long]]]] =
+    df.select(col("id"), ccf.as("ccf")).collect().map { r =>
+      r.getInt(0) -> Option(r.getSeq[Any](1)).map(_.map {
+        case null => None
+        case d: Double => Some(java.lang.Double.doubleToRawLongBits(d))
+        case other => fail(s"unexpected lag $other")
+      }.toSeq)
+    }.toMap
+
+  test("CrossCorrelate == transform/aggregate lag fold bit for bit, codegen'd and interpreted") {
+    // six decades of magnitude, both signs: the sums round differently in
+    // any other accumulation order
+    def value(): Double = (if (rng.nextBoolean()) 1.0 else -1.0) * math.pow(10, rng.nextDouble() * 6 - 3)
+    val rows = for {
+      n <- Seq(1, 2, 7, 64, 512, 1024)
+      r <- 0 until 4
+    } yield (n * 10 + r, Seq.fill[Any](n)(value()), Seq.fill[Any](n)(value()))
+    val df = ccfFrame(rows)
+    inBothCodegenModes { mode =>
+      val native = ccfBits(df, Toa.crossCorrelate(col("p"), col("t")))
+      val reference = ccfBits(df, hofCcf(col("p"), col("t")))
+      assert(native.size == rows.size)
+      rows.foreach { case (id, p, _) =>
+        assert(native(id).map(_.size).contains(p.size), s"$mode row $id")
+        assert(native(id) == reference(id), s"$mode row $id")
+      }
+    }
+  }
+
+  test("CrossCorrelate edge semantics match the fold: nulls, NaN, length mismatch, empty template") {
+    val t3 = Seq[Any](1.0, 2.0, 3.0)
+    val nulls3 = Some(Seq(None, None, None))
+    val rows = Seq(
+      (1, Seq[Any](4.0, 5.0), null),                   // null template → null
+      (2, null, t3),                                    // null profile → n null lags
+      (3, Seq[Any](4.0, null, 6.0), t3),                // null profile bin → n null lags
+      (4, Seq[Any](4.0, 5.0, 6.0), Seq[Any](1.0, null, 3.0)), // null template bin
+      (5, Seq[Any](4.0, 5.0, 6.0, 7.0, null), t3),      // longer profile: first n bins only
+      (6, Seq[Any](4.0, Double.NaN, 6.0), t3),          // NaN → all-NaN lags
+      (7, Seq[Any](4.0, 5.0, 6.0), Seq[Any](1.0, 2.0, Double.NaN)),
+      (8, Seq[Any](4.0, 5.0, 6.0), t3))
+    val df = ccfFrame(rows)
+    val nanBits = Some(java.lang.Double.doubleToRawLongBits(Double.NaN))
+    inBothCodegenModes { mode =>
+      val native = ccfBits(df, Toa.crossCorrelate(col("p"), col("t")))
+      assert(native == ccfBits(df, hofCcf(col("p"), col("t"))), mode)
+      assert(native(1).isEmpty, mode)
+      Seq(2, 3, 4).foreach(id => assert(native(id) == nulls3, s"$mode row $id"))
+      assert(native(5) == native(8), mode)
+      Seq(6, 7).foreach(id => assert(native(id) == Some(Seq(nanBits, nanBits, nanBits)), s"$mode row $id"))
+      // a shorter profile and an empty template both fail loudly, as the fold does
+      Seq((9, Seq[Any](4.0, 5.0), t3), (10, Seq[Any](4.0), Seq.empty[Any])).foreach { row =>
+        val bad = ccfFrame(Seq(row))
+        intercept[Exception](bad.select(Toa.crossCorrelate(col("p"), col("t"))).collect())
+        intercept[Exception](bad.select(hofCcf(col("p"), col("t"))).collect())
+      }
+    }
   }
 }
