@@ -2565,10 +2565,12 @@ object SignalQueries {
     * (`pscrunch,t 320 f 8,t 64 f 16,t 8 f 32,tscrunch,fscrunch,saveall`,
     * configuration_files/project_specific/meertime_jitter.config)
     * renders each product with a separate pam pass over the archive;
-    * here the VERBATIM line parses into five plans and one scan + one
-    * map-side-combining shuffle emits all five resolutions (the
-    * CUBE/Expand pattern over arbitrary bucketings). Oracle = the same
-    * plans as a VALUES dim cross-joined and re-aggregated. */
+    * here the VERBATIM line parses into five plans and one scan emits
+    * all five resolutions: the events aggregate once per (event_type,
+    * hour, user_id % 32) cell, and each product rolls up from those
+    * exact partials (the data-cube method over arbitrary bucketings).
+    * Oracle = the same plans as a VALUES dim cross-joined and
+    * re-aggregated from the raw rows. */
   private lazy val q115 = Q(
     "q115_decimation_products",
     (s, dir) => {

@@ -31,10 +31,11 @@ import graft.sources.FitsFile
   * double_value, bool_value, comment).
   *
   * Spark-first surface (same design as [[ParDataSource]]):
-  *  - one InputPartition PER FILE → a 10⁶-archive catalog parses with
-  *    full cluster parallelism, headers only (table DATA blocks are
-  *    skipped by the HDU walk — a card scan never reads payload rows
-  *    into Spark rows);
+  *  - whole archives packed into input partitions by Spark's own
+  *    file-source rule ([[FileScans.pack]]: about one task per core for
+  *    a catalog of small archives, never more tasks than files), headers
+  *    only (table DATA blocks are skipped by the HDU walk — a card scan
+  *    never reads payload rows into Spark rows);
   *  - column pruning: `select(key, double_value)` materializes only
   *    those fields;
   *  - filter pushdown for `key` and `source_file` equality/IN: key
@@ -128,7 +129,7 @@ final class FitsScan(paths: Seq[String], required: StructType, pushed: Array[Fil
     org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
 
   private lazy val prunedFiles: Seq[(String, Long)] = {
-    val files = FitsScan.listFiles(paths, hadoopConf.value)
+    val files = FileScans.listFiles(paths, hadoopConf.value)
     allowed("source_file") match {
       case Some(ok) => files.filter(f => ok.contains(f._1))
       case None => files
@@ -156,51 +157,39 @@ final class FitsScan(paths: Seq[String], required: StructType, pushed: Array[Fil
   }
 
   override def planInputPartitions(): Array[InputPartition] =
-    prunedFiles.map(f => FitsInputPartition(f._1): InputPartition).toArray
+    FileScans.pack(prunedFiles)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new FitsReaderFactory(required, allowed("key"), hadoopConf, strict)
 }
-
-object FitsScan {
-  /** Same one-level directory expansion as [[ParDataSource.listFiles]];
-    * lengths ride along from the listing RPCs. */
-  private[v2] def listFiles(paths: Seq[String], conf: Configuration): Seq[(String, Long)] =
-    paths.flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val st = fs.getFileStatus(path)
-      if (st.isDirectory) {
-        fs.listStatus(path).toSeq
-          .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-          .map(s => (s.getPath.toString, s.getLen))
-      } else Seq((st.getPath.toString, st.getLen))
-    }
-}
-
-final case class FitsInputPartition(file: String) extends InputPartition
 
 final class FitsReaderFactory(required: StructType, keyFilter: Option[Set[String]],
                               hadoopConf: org.apache.spark.util.SerializableConfiguration,
                               strict: Boolean = false)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new FitsPartitionReader(partition.asInstanceOf[FitsInputPartition].file, required,
+    new FitsPartitionReader(partition.asInstanceOf[FilesPartition].files, required,
       keyFilter, hadoopConf.value, strict)
 }
 
-/** Parses one FITS file's headers. The HDU walk reads header blocks and
-  * SEEKS past extension data, so only ~2880·blocks bytes per HDU are
-  * materialized no matter how large the table payloads are; cards stream
-  * out pruned to the required schema with pushed key filters applied
-  * during the walk. */
-final class FitsPartitionReader(file: String, required: StructType,
+/** Parses the headers of a partition's FITS files, one file at a time.
+  * The HDU walk reads header blocks and SEEKS past extension data, so
+  * only ~2880·blocks bytes per HDU are materialized no matter how large
+  * the table payloads are; cards stream out pruned to the required
+  * schema with pushed key filters applied during the walk. */
+final class FitsPartitionReader(files: Seq[String], required: StructType,
                                 keyFilter: Option[Set[String]],
                                 conf: Configuration,
                                 strict: Boolean = false)
     extends PartitionReader[InternalRow] {
 
-  private val cards: Iterator[(Int, Int, FitsFile.FitsCard)] = {
+  private val cards: Iterator[(UTF8String, Int, Int, FitsFile.FitsCard)] =
+    files.iterator.flatMap { file =>
+      val fileUtf8 = UTF8String.fromString(file)
+      walk(file).map { case (hdu, pos, c) => (fileUtf8, hdu, pos, c) }
+    }
+
+  private def walk(file: String): Iterator[(Int, Int, FitsFile.FitsCard)] = {
     val path = new Path(file)
     val fs = path.getFileSystem(conf)
     val len = fs.getFileStatus(path).getLen
@@ -270,8 +259,7 @@ final class FitsPartitionReader(file: String, required: StructType,
     }
   }
 
-  private val fileUtf8 = UTF8String.fromString(file)
-  private var current: (Int, Int, FitsFile.FitsCard) = _
+  private var current: (UTF8String, Int, Int, FitsFile.FitsCard) = _
 
   override def next(): Boolean = {
     if (!cards.hasNext) return false
@@ -280,7 +268,7 @@ final class FitsPartitionReader(file: String, required: StructType,
   }
 
   override def get(): InternalRow = {
-    val (hdu, pos, c) = current
+    val (fileUtf8, hdu, pos, c) = current
     val values = required.fields.map { f =>
       f.name match {
         case "source_file" => fileUtf8

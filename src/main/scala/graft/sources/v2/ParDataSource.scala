@@ -2,7 +2,6 @@ package graft.sources.v2
 
 import java.util
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -30,8 +29,10 @@ import graft.sources.ParFile
   * D→E exponent fix, d/f/e/s value classes, optional uncertainty).
   *
   * Spark-first surface, not just a reader:
-  *  - one InputPartition PER FILE → a 10⁶-file catalog scans with full
-  *    cluster parallelism and per-file locality, no driver-side parsing;
+  *  - whole files packed into input partitions by Spark's own
+  *    file-source rule ([[FileScans.pack]]: a catalog of 10⁶ small
+  *    ephemerides scans in about one task per core, not one per file),
+  *    no driver-side parsing;
   *  - column pruning (SupportsPushDownRequiredColumns): `select(param,
   *    num_value)` materializes only those fields per row;
   *  - filter pushdown (SupportsPushDownFilters) for `param` and
@@ -64,26 +65,6 @@ object ParDataSource {
     StructField("value_type", StringType, nullable = false),
     StructField("num_value", DoubleType, nullable = true),
     StructField("err", DoubleType, nullable = true)))
-
-  /** Resolve the load path(s) to the concrete (file, byteLength) list
-    * (driver-side listing only — parsing stays on executors). Directories
-    * expand one level, like Spark's text source with default settings.
-    * Lengths come FROM the listing RPCs (listStatus/getFileStatus carry
-    * them) so statistics never pay a second round-trip per file. Uses
-    * the session's Hadoop configuration (spark.hadoop.* — S3 credentials,
-    * defaultFS, kerberos), not a bare classpath Configuration. */
-  private[v2] def listFiles(paths: Seq[String], conf: Configuration): Seq[(String, Long)] = {
-    paths.flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val st = fs.getFileStatus(path)
-      if (st.isDirectory) {
-        fs.listStatus(path).toSeq
-          .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-          .map(s => (s.getPath.toString, s.getLen))
-      } else Seq((st.getPath.toString, st.getLen))
-    }
-  }
 }
 
 final class ParTable(properties: Map[String, String]) extends Table with SupportsRead {
@@ -144,7 +125,7 @@ final class ParScan(paths: Seq[String], required: StructType, pushed: Array[Filt
   // one listing per Scan instance, shared by partition planning and
   // statistics; lengths ride along from the listing RPCs
   private lazy val prunedFiles: Seq[(String, Long)] = {
-    val files = ParDataSource.listFiles(paths, hadoopConf.value)
+    val files = FileScans.listFiles(paths, hadoopConf.value)
     allowed("source_file") match {
       case Some(ok) => files.filter(f => ok.contains(f._1))
       case None => files
@@ -178,31 +159,36 @@ final class ParScan(paths: Seq[String], required: StructType, pushed: Array[Filt
   override def planInputPartitions(): Array[InputPartition] =
     // partition pruning: a pushed source_file filter drops whole files
     // from the scan before any task launches
-    prunedFiles.map(f => ParInputPartition(f._1): InputPartition).toArray
+    FileScans.pack(prunedFiles)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ParReaderFactory(required, allowed("param"), hadoopConf)
 }
 
-final case class ParInputPartition(file: String) extends InputPartition
-
 final class ParReaderFactory(required: StructType, paramFilter: Option[Set[String]],
                              hadoopConf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ParPartitionReader(partition.asInstanceOf[ParInputPartition].file, required,
+    new ParPartitionReader(partition.asInstanceOf[FilesPartition].files, required,
       paramFilter, hadoopConf.value)
 }
 
-/** Parses one .par file. Files are small config artifacts (≤ a few KB);
-  * the whole file reads in one shot, then rows stream out pruned to the
-  * required schema with pushed param filters applied during the parse. */
-final class ParPartitionReader(file: String, required: StructType,
+/** Parses a partition's .par files, one at a time. Files are small
+  * config artifacts (≤ a few KB); each reads in one shot, then rows
+  * stream out pruned to the required schema with pushed param filters
+  * applied during the parse. */
+final class ParPartitionReader(files: Seq[String], required: StructType,
                                paramFilter: Option[Set[String]],
                                conf: Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val entries: Iterator[ParFile.ParEntry] = {
+  private val entries: Iterator[(UTF8String, ParFile.ParEntry)] =
+    files.iterator.flatMap { file =>
+      val fileUtf8 = UTF8String.fromString(file)
+      parse(file).map(e => (fileUtf8, e))
+    }
+
+  private def parse(file: String): Iterator[ParFile.ParEntry] = {
     val path = new Path(file)
     val fs = path.getFileSystem(conf)
     val in = fs.open(path)
@@ -216,8 +202,7 @@ final class ParPartitionReader(file: String, required: StructType,
     }
   }
 
-  private val fileUtf8 = UTF8String.fromString(file)
-  private var current: ParFile.ParEntry = _
+  private var current: (UTF8String, ParFile.ParEntry) = _
 
   override def next(): Boolean = {
     if (!entries.hasNext) return false
@@ -226,14 +211,15 @@ final class ParPartitionReader(file: String, required: StructType,
   }
 
   override def get(): InternalRow = {
+    val (fileUtf8, e) = current
     val values = required.fields.map { f =>
       f.name match {
         case "source_file" => fileUtf8
-        case "param" => UTF8String.fromString(current.param)
-        case "raw" => UTF8String.fromString(current.raw)
-        case "value_type" => UTF8String.fromString(current.valueType)
-        case "num_value" => current.numValue.map(Double.box).orNull
-        case "err" => current.err.map(Double.box).orNull
+        case "param" => UTF8String.fromString(e.param)
+        case "raw" => UTF8String.fromString(e.raw)
+        case "value_type" => UTF8String.fromString(e.valueType)
+        case "num_value" => e.numValue.map(Double.box).orNull
+        case "err" => e.err.map(Double.box).orNull
         case other => throw new IllegalArgumentException(s"graft-par: unknown column $other")
       }
     }

@@ -3,13 +3,15 @@ package graft
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.sources.FitsFile
 import graft.sources.FitsFile.BlockSize
 
 /** The graft-fits DataSource V2: schema/typing parity with FitsFile.load,
-  * one partition per file, the streaming data-SKIP HDU walk, column
+  * one partition per file for a couple of tiny archives and core-sized
+  * packed partitions for many, the streaming data-SKIP HDU walk, column
   * pruning, pushed key filters, and source_file partition pruning. */
 class FitsDataSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -169,5 +171,75 @@ class FitsDataSourceSpec extends SparkSpec {
     // strict on CLEAN archives is a no-op: same rows as lenient
     val clean = spark.read.format("graft-fits").option("strict", true).load(dir)
     assert(clean.count() === read().count())
+  }
+
+  /** 32 small archives (fitsA/fitsB with distinct OBSFREQ values) in one
+    * directory; `corruptAt` replaces that one with a header cut off
+    * before its END card. */
+  private def manyArchives(corruptAt: Option[Int] = None): (String, Map[String, Array[Byte]]) = {
+    val d = java.nio.file.Files.createTempDirectory("fitsv2many").toFile
+    val bytes = (0 until 32).map { i =>
+      val name = f"obs_$i%02d.fits"
+      val freq = kv("OBSFREQ", f"${1000.0 + i}%.1f")
+      val b =
+        if (corruptAt.contains(i)) fitsB ++ block(Seq(kv("XTENSION", "'BINTABLE'"), kv("BITPIX", "8")))
+        else if (i % 2 == 0) block(Seq(kv("SIMPLE", "T"), kv("NAXIS", "0"), freq, card("END"))) ++
+          fitsA.drop(BlockSize)
+        else block(Seq(kv("SIMPLE", "T"), kv("NAXIS", "0"), freq, kv("SRC_NAME", s"'PSR$i'"), card("END")))
+      java.nio.file.Files.write(new java.io.File(d, name).toPath, b)
+      name -> b
+    }.toMap
+    (d.getAbsolutePath, bytes)
+  }
+
+  test("32 small archives pack into at most defaultParallelism partitions, rows unchanged") {
+    val (d, bytes) = manyArchives()
+    val df = spark.read.format("graft-fits").load(d)
+    val parts = df.rdd.getNumPartitions
+    assert(parts >= 1 && parts <= spark.sparkContext.defaultParallelism,
+      s"$parts partitions for 32 files")
+    val rows = df.select("source_file", "hdu", "pos", "key", "raw", "str_value",
+        "long_value", "double_value", "bool_value", "comment")
+      .collect().map(r => Row.fromSeq(r.getString(0).split('/').last +: r.toSeq.tail)).toSeq
+    // the per-file layout: FitsFile.readHdus on each archive's bytes
+    val expected = bytes.toSeq.flatMap { case (name, b) =>
+      FitsFile.readHdus(b).flatMap { case (hdu, cards) =>
+        cards.zipWithIndex.map { case (c, pos) =>
+          Row(name, hdu, pos, c.key, c.raw.trim, c.strValue.orNull, c.longValue.map(Long.box).orNull,
+            c.doubleValue.map(Double.box).orNull, c.boolValue.map(Boolean.box).orNull, c.comment.orNull)
+        }
+      }
+    }
+    def multiset(rs: Seq[Row]) = rs.groupBy(identity).map { case (k, v) => k -> v.size }
+    assert(rows.length === expected.length)
+    assert(multiset(rows.toSeq) === multiset(expected))
+  }
+
+  test("strict corruption inside a packed partition still throws, naming the file") {
+    val (d, _) = manyArchives(corruptAt = Some(13))
+    val strict = spark.read.format("graft-fits").option("strict", true).load(d)
+    assert(strict.rdd.getNumPartitions < 32, "the corrupt archive shares its partition")
+    val e = intercept[org.apache.spark.SparkException] { strict.count() }
+    val root = Iterator.iterate(e: Throwable)(_.getCause).find(t =>
+      t.getCause == null || t.getMessage.contains("graft-fits strict")).get
+    assert(root.getMessage.contains("obs_13.fits"))
+    // lenient: every other archive still reads in full
+    val lenient = spark.read.format("graft-fits").load(d)
+    assert(lenient.select("source_file").distinct().count() === 32)
+  }
+
+  test("a pushed source_file filter still prunes packed partitions") {
+    val (d, _) = manyArchives()
+    val files = spark.read.format("graft-fits").load(d).select("source_file").distinct()
+      .as[String].collect().sorted
+    assert(files.length === 32)
+    val one = spark.read.format("graft-fits").load(d).filter(col("source_file") === files(5))
+    assert(one.rdd.getNumPartitions === 1)
+    assert(one.select("source_file").distinct().as[String].collect().toSeq === Seq(files(5)))
+    val three = spark.read.format("graft-fits").load(d)
+      .filter(col("source_file").isin(files(0), files(9), files(31)))
+    assert(three.rdd.getNumPartitions <= 3)
+    assert(three.select("source_file").distinct().as[String].collect().toSet
+      === Set(files(0), files(9), files(31)))
   }
 }

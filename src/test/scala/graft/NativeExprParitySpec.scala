@@ -296,4 +296,35 @@ class NativeExprParitySpec extends SparkSpec {
       }
     }
   }
+
+  test("KeplerSolve codegen'd and interpreted both equal KeplerMath.solve bit for bit (scalacheck)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    import graft.expressions.KeplerMath
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("m", DoubleType), StructField("ecc", DoubleType)))
+    // ecc on both sides of the near-circular shortcut (1e-4), up to 0.99
+    val ecc = Gen.oneOf[Any](0.0, 5e-5, 0.3, 0.99, Double.NaN, null)
+    val anomaly = Gen.frequency[Any](
+      8 -> Gen.choose(-50.0, 50.0), 1 -> Gen.const(Double.NaN), 1 -> Gen.const(null))
+    val batches = Gen.listOfN(48, Gen.zip(anomaly, ecc))
+    def bits(d: Any): Option[Long] =
+      Option(d).map(x => java.lang.Double.doubleToRawLongBits(x.asInstanceOf[Double]))
+    inBothCodegenModes { mode =>
+      val prop = Prop.forAllNoShrink(batches) { pairs =>
+        val df = spark.createDataFrame(spark.sparkContext.parallelize(
+          pairs.zipWithIndex.map { case ((m, e), i) => Row(i, m, e) }, 2), schema)
+        val got = df.select(col("id"), expr("kepler_solve(m, ecc)")).collect()
+          .map(r => r.getInt(0) -> bits(r.get(1))).toMap
+        val want = pairs.zipWithIndex.map { case ((m, e), i) =>
+          i -> (if (m == null || e == null) None
+                else bits(KeplerMath.solve(m.asInstanceOf[Double], e.asInstanceOf[Double])))
+        }.toMap
+        got == want
+      }
+      val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(12)
+        .withInitialSeed(Seed(4L)).withWorkers(1), prop)
+      assert(result.passed, s"$mode: $result")
+    }
+  }
 }

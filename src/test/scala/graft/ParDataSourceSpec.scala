@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.sources.ParFile
 
 /** The graft-par DataSource V2: schema/typing parity with ParFile,
-  * per-file partitions, column pruning, pushed param filters, and
-  * source_file partition pruning. */
+  * one partition per file for a couple of tiny files and core-sized
+  * packed partitions for many, column pruning, pushed param filters,
+  * and source_file partition pruning. */
 class ParDataSourceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -96,5 +98,47 @@ class ParDataSourceSpec extends SparkSpec {
     assert(one.rdd.getNumPartitions === 1, "pushed source_file filter must prune partitions")
     assert(one.select("param").distinct().as[String].collect().toSet
       === Set("PSRJ", "F0", "F1", "ECC"))
+  }
+
+  /** 32 small ephemerides, alternating parA/parB shapes with distinct F0. */
+  private lazy val many: (String, Map[String, String]) = {
+    val d = java.nio.file.Files.createTempDirectory("parv2many").toFile
+    val texts = (0 until 32).map { i =>
+      val text = (if (i % 2 == 0) parA else parB).replaceFirst("F0 +\\S+", s"F0             ${100.0 + i}")
+      val name = f"psr_$i%02d.par"
+      java.nio.file.Files.writeString(new java.io.File(d, name).toPath, text)
+      name -> text
+    }.toMap
+    (d.getAbsolutePath, texts)
+  }
+
+  test("32 small files pack into at most defaultParallelism partitions, rows unchanged") {
+    val (d, texts) = many
+    val df = spark.read.format("graft-par").load(d)
+    val parts = df.rdd.getNumPartitions
+    assert(parts >= 1 && parts <= spark.sparkContext.defaultParallelism,
+      s"$parts partitions for 32 files")
+    val rows = df.select("source_file", "param", "raw", "value_type", "num_value", "err")
+      .collect().map(r => Row.fromSeq(r.getString(0).split('/').last +: r.toSeq.tail)).toSeq
+    // the per-file layout: ParFile.parse on each file's text
+    val expected = texts.toSeq.flatMap { case (name, text) =>
+      ParFile.parse(text).map(e => Row(name, e.param, e.raw, e.valueType,
+        e.numValue.map(Double.box).orNull, e.err.map(Double.box).orNull))
+    }
+    def multiset(rs: Seq[Row]) = rs.groupBy(identity).map { case (k, v) => k -> v.size }
+    assert(rows.length === expected.length)
+    assert(multiset(rows.toSeq) === multiset(expected))
+    assert(rows.count(_.getString(1) == "F0") === 32)
+  }
+
+  test("a pushed source_file filter still prunes packed partitions") {
+    val (d, _) = many
+    val files = spark.read.format("graft-par").load(d).select("source_file").distinct()
+      .as[String].collect().sorted
+    assert(files.length === 32)
+    val one = spark.read.format("graft-par").load(d).filter(col("source_file") === files(7))
+    assert(one.rdd.getNumPartitions === 1)
+    assert(one.select("num_value").where(col("param") === "F0").as[Double].collect().toSeq
+      === Seq(107.0))
   }
 }

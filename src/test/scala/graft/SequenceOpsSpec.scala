@@ -2,9 +2,14 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
 import graft.operators.{Downsample, Funnel, LangModel}
 
-/** Downsample.rollingRange (time-RANGE rolling aggregate), LangModel.pmiTop
+/** Downsample.rollingRange (time-RANGE rolling aggregate),
+  * Downsample.products (multi-resolution decimation), LangModel.pmiTop
   * (PMI collocations), Funnel.sequencePattern (event-sequence regex). */
 class SequenceOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -188,5 +193,100 @@ class SequenceOpsSpec extends SparkSpec {
         Seq(Downsample.Plan("all", 0, 0)))
       .collect()
     assert(tsc.length === 2 && tsc.map(_.getAs[Long]("n")).sum === 200)
+  }
+
+  /** The explode-then-aggregate body `Downsample.products` had before the
+    * finest-grid roll-up — kept here as its reference: every raw row
+    * replicates into its (plan, t_bin, f_bin) memberships, then one
+    * aggregate sums the rows. */
+  private def explodeProducts(df: DataFrame, keyCols: Seq[String], tIdx: Column, fIdx: Column,
+                              valueCol: Column, plans: Seq[Downsample.Plan]): DataFrame = {
+    def bin(idx: Column, factor: Long): Column =
+      if (factor == 0L) lit(0L)
+      else if (factor == 1L) idx.cast("long")
+      else floor(idx / lit(factor.toDouble)).cast("long")
+    val rep = explode(array(plans.map { p =>
+      struct(lit(p.name).as("plan"), bin(tIdx, p.tFactor).as("t_bin"),
+        bin(fIdx, p.fFactor).as("f_bin"))
+    }: _*)).as("__p")
+    df.select(keyCols.map(col) ++ Seq(rep, valueCol.as("__v")): _*)
+      .select(keyCols.map(col) ++ Seq(col("__p.plan").as("plan"),
+        col("__p.t_bin").as("t_bin"), col("__p.f_bin").as("f_bin"), col("__v")): _*)
+      .groupBy(keyCols.map(col) ++ Seq(col("plan"), col("t_bin"), col("f_bin")): _*)
+      .agg(count(lit(1)).as("n"),
+        sum(col("__v").cast("decimal(38,6)")).cast("double").as("sum_value"),
+        (sum(col("__v").cast("decimal(38,6)")).cast("double") / count(col("__v")))
+          .as("avg_value"))
+  }
+
+  /** (keys, plan, t_bin, f_bin) → (n, raw bits of sum_value, of avg_value). */
+  private def productBits(df: DataFrame, keyCols: Seq[String]): Map[Seq[Any], (Long, Option[Long], Option[Long])] = {
+    def bits(r: Row, f: String) =
+      Option(r.getAs[java.lang.Double](f)).map(d => java.lang.Double.doubleToRawLongBits(d))
+    val rows = df.collect()
+    val out = rows.map { r =>
+      (keyCols ++ Seq("plan", "t_bin", "f_bin")).map(r.getAs[Any]) ->
+        ((r.getAs[Long]("n"), bits(r, "sum_value"), bits(r, "avg_value")))
+    }.toMap
+    assert(out.size === rows.length, "one row per (keys, plan, t_bin, f_bin)")
+    out
+  }
+
+  private val productsSchema = StructType(Seq(StructField("k1", StringType),
+    StructField("k2", IntegerType), StructField("t_idx", DoubleType),
+    StructField("f_idx", LongType), StructField("v", DoubleType)))
+
+  /** RDD-backed over three slices, so partial aggregates really merge. */
+  private def productsFrame(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), productsSchema)
+
+  test("products: finest-grid roll-up == explode-then-aggregate bit for bit on random data") {
+    val rng = new scala.util.Random(115)
+    def maybeNull[A](a: => A): Any = if (rng.nextInt(12) == 0) null else a
+    val rows = (0 until 3000).map { _ =>
+      Row(maybeNull(Seq("a", "b", "c")(rng.nextInt(3))), maybeNull(rng.nextInt(3) - 1),
+        // null, negative and fractional time indices
+        maybeNull(rng.nextInt(40) - 12 + Seq(0.0, 0.25, 0.5, 0.999)(rng.nextInt(4))),
+        maybeNull((rng.nextInt(24) - 6).toLong),
+        // null, NaN and six decades of magnitude of both signs: any
+        // other rounding of the sums shows in the raw bits
+        if (rng.nextInt(50) == 0) Double.NaN
+        else maybeNull((if (rng.nextBoolean()) 1.0 else -1.0) * math.pow(10, rng.nextDouble() * 9 - 3)))
+    }
+    val df = productsFrame(rows)
+    val plans = Seq(Downsample.Plan("t0f1", 0, 1), Downsample.Plan("t1f0", 1, 0),
+      Downsample.Plan("t0f0", 0, 0), Downsample.Plan("t1f1", 1, 1),
+      Downsample.Plan("t3f4", 3, 4), Downsample.Plan("t7f2", 7, 2))
+    val keys = Seq("k1", "k2")
+    val rolled = productBits(
+      Downsample.products(df, keys, col("t_idx"), col("f_idx"), col("v"), plans), keys)
+    val reference = productBits(
+      explodeProducts(df, keys, col("t_idx"), col("f_idx"), col("v"), plans), keys)
+    assert(rolled.size === reference.size)
+    assert(rolled === reference)
+    // the fixture really covers null and NaN outputs and null bins
+    assert(rolled.values.exists(_._2.isEmpty))
+    assert(rolled.keys.exists(_(keys.size + 1) == null))
+    assert(rolled.values.map(_._1).sum === rows.length * plans.size)
+    // output schema unchanged, `n` included
+    assert(Downsample.products(df, keys, col("t_idx"), col("f_idx"), col("v"), plans).schema
+      === explodeProducts(df, keys, col("t_idx"), col("f_idx"), col("v"), plans).schema)
+  }
+
+  test("products: a decimal(38,6) sum overflow fails the same way in both forms") {
+    // three 9e31 samples in one cell: |Σ| = 2.7e32 > 1e32, decimal(38,6)'s range
+    val df = productsFrame(Seq.fill(3)(Row("a", 1, 0.0, 0L, 9e31)) :+ Row("a", 1, 5.0, 1L, 1.0))
+    val plans = Seq(Downsample.Plan("t2f2", 2, 2))
+    def failure(out: DataFrame): (Class[_], String) = {
+      val e = intercept[Throwable](out.collect())
+      val root = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case t: org.apache.spark.SparkThrowable if t.getCondition != null => t }
+      assert(root.isDefined, s"no Spark error condition in $e")
+      (root.get.getClass, root.get.getCondition)
+    }
+    val rolled = failure(Downsample.products(df, Seq("k1"), col("t_idx"), col("f_idx"), col("v"), plans))
+    val reference = failure(explodeProducts(df, Seq("k1"), col("t_idx"), col("f_idx"), col("v"), plans))
+    assert(rolled === reference)
+    assert(rolled._2.contains("OVERFLOW") || rolled._2.contains("OUT_OF_RANGE"), rolled._2)
   }
 }
