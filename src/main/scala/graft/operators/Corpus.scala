@@ -95,12 +95,22 @@ object Corpus {
     * kept doc carries its source's `mixture_rate`. Reproducibility is
     * [[sampleByHash]]'s: the keep-decision is a pure function of content
     * and the (deterministic) rate, so the same corpus emerges on every
-    * engine/run/partitioning. Two corpus scans (one aggregate, one
-    * filter) and a broadcast join — nothing large shuffles. */
+    * engine/run/partitioning.
+    *
+    * The per-source rates (one row per target source) are materialized
+    * once behind a lazy local checkpoint, stored by the first action on
+    * the result. Every later action (a collect, a checksum, a word count
+    * downstream) then reads those stored rows and scans the corpus only
+    * for the filter, instead of re-running the rate aggregate's corpus
+    * scan and its capacity cross join each time. The barrier sits on the
+    * rates, not the corpus, so a consumer's `select(idCol)` still prunes
+    * the corpus scan; the broadcast join stays — nothing large shuffles.
+    * Batch only, like the aggregate it stores. */
   def sampleToMixture(df: DataFrame, textCol: String, sourceCol: String,
                       tokensCol: Column, targets: Seq[(String, Double)]): DataFrame = {
     val rates = mixtureRates(df, sourceCol, tokensCol, targets)
       .select(col("source").as("__msrc"), col("rate").as("mixture_rate"))
+      .localCheckpoint(false)
     val joined = df.join(broadcast(rates), col(sourceCol) === col("__msrc")).drop("__msrc")
     sampleByHash(joined, textCol, col("mixture_rate"))
   }
@@ -244,6 +254,18 @@ object Corpus {
     * value (the same tiny-collect class as broadcast query vectors); at
     * 1M benchmark shingles and 1% FP that is ~1.2 MB shipped per task
     * versus broadcasting tens of MB of distinct shingle strings.
+    *
+    * The hit set (ids of the docs that share a shingle with the
+    * benchmark) is materialized once behind a lazy local checkpoint,
+    * stored by the first action that reads `contaminated` (a bare count
+    * needs no hit row: the optimizer drops the left join onto the
+    * distinct ids). Every later action reads
+    * the stored ids and only re-runs the left join onto `corpus`, never
+    * the Bloom probe, the shingle explode or the verify join. The barrier
+    * sits on the small hit frame, so a consumer's `select(idCol)` still
+    * prunes `corpus`; pass a materialized corpus (such as
+    * `Dedup.dedupCorpusBy`'s result) to make the whole output a read of
+    * stored blocks. Batch only, like the Bloom build before it.
     */
   def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame, textCol: String,
                          idCol: String, n: Int = 8, fpp: Double = 0.01): DataFrame = {
@@ -287,6 +309,7 @@ object Corpus {
       .join(broadcast(verifyDim), Seq("__s"), "leftsemi")
       .select(idCol).distinct()
       .withColumn("__c", lit(1L))
+      .localCheckpoint(false)
     corpus.join(hits, Seq(idCol), "left")
       .withColumn("contaminated", coalesce(col("__c"), lit(0L)))
       .drop("__c")

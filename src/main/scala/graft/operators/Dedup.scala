@@ -25,9 +25,10 @@ object Dedup {
     graft.sources.Tables.parallelized(df, idCol)
 
   /** Barrier for a CORPUS-SIZED working set (the one-call pipelines'
-    * exact-deduped `unique` frame — every other checkpoint in this file
-    * is candidate/signature-bounded). Stored serialized-with-disk by
-    * default (`spark.graft.checkpoint.corpusStorageLevel`): the default
+    * exact-deduped `unique` frame, and [[dedupCorpusBy]]'s survivors —
+    * every other checkpoint in this file is candidate/signature-bounded).
+    * Stored serialized-with-disk by default
+    * (`spark.graft.checkpoint.corpusStorageLevel`): the default
     * deserialized MEMORY_AND_DISK level can thrash executor memory when
     * the working set approaches corpus scale. Disposition (the
     * localCheckpoint trade, deliberate): blocks live on executors with
@@ -680,7 +681,18 @@ object Dedup {
   /** [[dedupCorpus]] with the [[survivorsBy]] policy: LSH candidates →
     * Jaccard verify at `threshold` → connected components → the doc
     * maximizing `orderCol` survives per cluster. The exact pre-stage
-    * also keeps the policy winner per identical text (not min id). */
+    * also keeps the policy winner per identical text (not min id).
+    *
+    * The result is materialized once: the survivor frame sits behind the
+    * same lazy corpus barrier as `unique` (stored by the first action,
+    * `spark.graft.checkpoint.corpusStorageLevel`), so every later action
+    * on it (a collect, a word count, a downstream checksum) reads the
+    * stored rows instead of re-running the loser anti join and its
+    * TopKPerKey winner selection. Two consequences: the barrier blocks
+    * column pruning below it, so a consumer's `select(idCol)` still reads
+    * the stored text; and once the survivors are stored, `unique`'s
+    * blocks are unreachable from the result and the ContextCleaner frees
+    * them when the working frames are collected. */
   def dedupCorpusBy(df: DataFrame, textCol: String, idCol: String,
                     orderCol: org.apache.spark.sql.Column,
                     threshold: Double = 0.8,
@@ -697,7 +709,7 @@ object Dedup {
       threshold, numHashes, bands, shingleN)
     val losers = survivorsBy(unique, verified, idCol, orderCol)
       .filter(col("keep") === 0L).select("doc_id")
-    unique.join(losers, unique(idCol) === losers("doc_id"), "left_anti")
+    corpusCheckpoint(unique.join(losers, unique(idCol) === losers("doc_id"), "left_anti"))
   }
 
   /** Packed-label bit width sized from a codebook's max `cluster` id —

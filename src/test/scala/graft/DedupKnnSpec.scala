@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFns, VectorFns}
@@ -63,6 +64,71 @@ class DedupKnnSpec extends SparkSpec {
     val kept = Dedup.dedupCorpusBy(corpus, "text", "doc_id", length(col("text")))
       .select("doc_id").as[Long].collect().toSet
     assert(kept === Set(10L, 12L))
+  }
+
+  /** `dedupCorpusBy` without its survivor barrier: the operator's body
+    * before the result was materialized, kept as the parity reference
+    * (`unique` keeps its barrier, at the default storage level). */
+  private def dedupCorpusByUnbarriered(df: DataFrame, textCol: String, idCol: String,
+                                       orderCol: Column, threshold: Double): DataFrame = {
+    import graft.plans.TopK
+    val exactWinners = TopK.perKey(
+        df.select(col(idCol).as("doc_id"), md5(col(textCol)).as("__h"), orderCol.as("__ord")),
+        Seq("__h"), Seq(TopK.desc("__ord"), TopK.asc("doc_id")), k = 1)
+      .select(col("doc_id").as("__keep"))
+    val unique = df.join(exactWinners, df(idCol) === col("__keep"), "leftsemi").localCheckpoint(false)
+    val verified = Dedup.jaccardVerify(Dedup.minhashLshFast(unique, textCol, idCol), unique, textCol, idCol)
+      .filter(col("jaccard") >= threshold).select("a_id", "b_id")
+    val losers = Dedup.survivorsBy(unique, verified, idCol, orderCol)
+      .filter(col("keep") === 0L).select("doc_id")
+    unique.join(losers, unique(idCol) === losers("doc_id"), "left_anti")
+  }
+
+  private val article = (1 to 40).map(i => s"w${i * 7 % 53}").mkString(" ")
+
+  /** (doc_id, source, text): exact copies, a near-dup family, null source,
+    * null texts, unicode and unrelated docs. */
+  private def dedupCorpusFixture: DataFrame = Seq[(Long, String, String)](
+    (1L, "web", article),
+    (2L, "web", article),                          // exact copy of 1
+    (3L, "wiki", article + " tail"),               // near dup, longest
+    (4L, null, article.replace("w14", "zz")),      // near dup, null source
+    (5L, "web", null),
+    (6L, "wiki", null),                            // second null text
+    (7L, "web", "Überlänge 日本語 text with unicode words in it"),
+    (8L, "books", "an unrelated document with its own words entirely"),
+    (9L, null, "x"),
+  ).toDF("doc_id", "source", "text")
+
+  test("dedupCorpusBy: materialized result == the unbarriered body (rows, schema), losers or none") {
+    val order = length(col("text"))
+    val withLosers = dedupCorpusFixture
+    val noLosers = withLosers.filter(col("doc_id") >= 7L)
+    Seq("with losers" -> withLosers, "no losers" -> noLosers).foreach { case (name, df) =>
+      val got = Dedup.dedupCorpusBy(df, "text", "doc_id", order)
+      val want = dedupCorpusByUnbarriered(df, "text", "doc_id", order, 0.8)
+      assert(got.schema == want.schema, name)
+      assert(rowBag(got) == rowBag(want), name)
+    }
+    val kept = Dedup.dedupCorpusBy(withLosers, "text", "doc_id", order)
+      .select("doc_id").as[Long].collect().toSet
+    // the family {1, 2, 3, 4} keeps its longest copy; one null text stays
+    assert(kept.intersect(Set(1L, 2L, 3L, 4L)) == Set(3L), kept)
+    assert(kept.intersect(Set(5L, 6L)).size == 1, kept)
+    assert(Set(7L, 8L, 9L).subsetOf(kept), kept)
+    assert(Dedup.dedupCorpusBy(noLosers, "text", "doc_id", order).count() == 3L)
+  }
+
+  test("dedupCorpusBy: a second action reads the stored survivors, no loser join or TopKPerKey") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.plans.TopKPerKeyExec
+    val out = Dedup.dedupCorpusBy(dedupCorpusFixture, "text", "doc_id", length(col("text")))
+    val n = out.count()
+    val nodes = countPlanNodes(out)
+    assert(!nodes.exists(_.isInstanceOf[TopKPerKeyExec]), nodes.map(_.nodeName))
+    // the count's own single-partition exchange is the only one left
+    assert(nodes.count(_.isInstanceOf[Exchange]) == 1, nodes.map(_.nodeName))
+    assert(out.count() == n)
   }
 
   test("Dedup.exact groups identical texts and keeps min id") {

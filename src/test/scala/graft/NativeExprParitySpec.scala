@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType, StructField, StructType}
 
 import graft.expressions.{MinHashSig, SimHashBits, WordShingles}
 import graft.functions.TextFns
@@ -324,6 +324,47 @@ class NativeExprParitySpec extends SparkSpec {
       }
       val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(12)
         .withInitialSeed(Seed(4L)).withWorkers(1), prop)
+      assert(result.passed, s"$mode: $result")
+    }
+  }
+
+  test("XxMinHashBands codegen'd and interpreted both equal the explode/fold reference (scalacheck)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    import graft.expressions.XxMinHashBands
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("text", StringType)))
+    val word = Gen.oneOf(vocab)
+    // null, empty, one-word and unicode docs; shingle widths up to 9, past
+    // most docs' word counts
+    val doc = Gen.frequency[String](
+      1 -> Gen.const(null), 1 -> Gen.const(""), 2 -> word,
+      6 -> Gen.choose(2, 14).flatMap(k => Gen.listOfN(k, word)).map(_.mkString(" ")))
+    val shape = Gen.zip(Gen.oneOf((8, 2), (4, 1), (6, 3)), Gen.choose(1, 9))
+    val batches = Gen.zip(shape, Gen.listOfN(40, doc))
+    inBothCodegenModes { mode =>
+      val prop = Prop.forAllNoShrink(batches) { case (((hashes, bands), n), texts) =>
+        val df = spark.createDataFrame(spark.sparkContext.parallelize(
+          texts.zipWithIndex.map { case (t, i) => Row(i, t) }, 2), schema)
+        val native = df.select(col("id"), XxMinHashBands.of(col("text"), hashes, bands, n))
+          .collect().map(r => r.getInt(0) -> Option(r.getSeq[Long](1)).map(_.toSeq)).toMap
+        // builtin shingles (no native expression), explode, per-component
+        // min(xxhash64(sh, i)), xxhash64 fold per band; no shingle → null
+        val ws = split(col("text"), " ")
+        val len = greatest(size(ws) - lit(n - 1), lit(0))
+        val shingles = (0 until n).map(o => slice(ws, lit(o + 1), len))
+          .reduce((acc, p) => zip_with(acc, p, (a, b) => concat(a, lit(" "), b)))
+        val perBand = hashes / bands
+        val mins = (0 until hashes).map(i => min(xxhash64(col("sh"), lit(i))).as(s"h$i"))
+        val reference = df.select(col("id"), explode(shingles).as("sh"))
+          .groupBy("id").agg(mins.head, mins.tail: _*)
+          .select(col("id"), array((0 until bands).map { b =>
+            xxhash64((b * perBand until (b + 1) * perBand).map(i => col(s"h$i")): _*)
+          }: _*))
+          .collect().map(r => r.getInt(0) -> r.getSeq[Long](1).toSeq).toMap
+        native == texts.indices.map(i => i -> reference.get(i)).toMap
+      }
+      val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(12)
+        .withInitialSeed(Seed(5L)).withWorkers(1), prop)
       assert(result.passed, s"$mode: $result")
     }
   }

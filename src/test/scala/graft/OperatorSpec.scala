@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AsOfJoin, Interpolate, Outliers, Sessionize}
@@ -270,6 +271,138 @@ class OperatorSpec extends SparkSpec {
         Seq((200L, "too short")).toDF("doc_id", "text"), "text", "doc_id", n = 8)
       .agg(sum($"contaminated")).as[Long].head()
     assert(none === 0L)
+  }
+
+  /** `decontaminateBloom` without its hit barrier: the operator's body
+    * before the hit set was materialized, kept as the parity reference. */
+  private def decontaminateBloomUnbarriered(corpus: DataFrame, benchmark: DataFrame,
+                                            textCol: String, idCol: String, n: Int): DataFrame = {
+    import graft.functions.TextFns
+    import graft.operators.Corpus
+    val benchShingles = benchmark
+      .select(explode(TextFns.shingles(col(textCol), n)).as("__s"))
+      .distinct()
+      .localCheckpoint(false)
+    val nShingles = benchShingles.count()
+    if (nShingles == 0L) return corpus.withColumn("contaminated", lit(0L))
+    val bloomBytes = Corpus.buildBloomBytes(benchShingles, nShingles, 0.01)
+    val hits = corpus
+      .select(col(idCol), TextFns.shingles(col(textCol), n).as("__sh"))
+      .filter(exists(col("__sh"), s => Corpus.mightContainCol(bloomBytes, s)))
+      .select(col(idCol), explode(col("__sh")).as("__s"))
+      .join(broadcast(benchShingles), Seq("__s"), "leftsemi")
+      .select(idCol).distinct()
+      .withColumn("__c", lit(1L))
+    corpus.join(hits, Seq(idCol), "left")
+      .withColumn("contaminated", coalesce(col("__c"), lit(0L)))
+      .drop("__c")
+  }
+
+  /** `sampleToMixture` without its rate barrier, kept as the parity
+    * reference. */
+  private def sampleToMixtureUnbarriered(df: DataFrame, textCol: String, sourceCol: String,
+                                         tokensCol: Column, targets: Seq[(String, Double)]): DataFrame = {
+    import graft.operators.Corpus
+    val rates = Corpus.mixtureRates(df, sourceCol, tokensCol, targets)
+      .select(col("source").as("__msrc"), col("rate").as("mixture_rate"))
+    val joined = df.join(broadcast(rates), col(sourceCol) === col("__msrc")).drop("__msrc")
+    Corpus.sampleByHash(joined, textCol, col("mixture_rate"))
+  }
+
+  private val evalDocs = Seq(
+    (100L, "w1 w2 w3 w4 w5 w6 w7 w8 w9"),
+    (101L, "a1 a2 a3 a4 a5 a6 a7 a8"),
+  ).toDF("doc_id", "text")
+
+  /** (doc_id, source, text, n_tok) with null sources and null texts. */
+  private val mixedCorpus = ((1 to 300).map { i =>
+    val src = Seq("web", "wiki", "books", null)(i % 4)
+    val text = if (i % 17 == 0) null
+      else if (i % 5 == 0) s"pre w1 w2 w3 w4 w5 w6 w7 w8 post $i"
+      else s"doc body number $i with some words"
+    (i.toLong, src, text, (i % 7 + 1).toLong)
+  } ++ Seq((900L, "web", "a1 a2 a3 a4 a5 a6 a7 a8", 3L), (901L, "wiki", "Überlänge 日本語 x", 2L)))
+    .toDF("doc_id", "source", "text", "n_tok")
+
+  test("decontaminateBloom: materialized hits == the unbarriered body (rows, schema) on edge corpora") {
+    import graft.operators.Corpus
+    val cases = Seq(
+      "mixed, null source and text" -> (mixedCorpus, evalDocs),
+      "empty hit set" -> (mixedCorpus.filter(col("doc_id") % 5 =!= 0L && col("doc_id") < 900L), evalDocs),
+      "every doc contaminated" -> (mixedCorpus.filter(col("doc_id") % 5 === 0L && col("doc_id") % 17 =!= 0L),
+        evalDocs),
+      "no benchmark shingles" -> (mixedCorpus, Seq((200L, "too short")).toDF("doc_id", "text")))
+    cases.foreach { case (name, (corpus, bench)) =>
+      val got = Corpus.decontaminateBloom(corpus, bench, "text", "doc_id", n = 8)
+      val want = decontaminateBloomUnbarriered(corpus, bench, "text", "doc_id", n = 8)
+      assert(got.schema == want.schema, name)
+      assert(rowBag(got) == rowBag(want), name)
+    }
+    val flags = cases.map { case (name, (corpus, bench)) =>
+      name -> Corpus.decontaminateBloom(corpus, bench, "text", "doc_id", n = 8)
+        .select("contaminated").as[Long].collect().toSet
+    }.toMap
+    assert(flags("mixed, null source and text") == Set(0L, 1L))
+    assert(flags("empty hit set") == Set(0L))
+    assert(flags("every doc contaminated") == Set(1L))
+  }
+
+  test("decontaminateBloom: a second action reads the stored hits, no probe, explode or distinct") {
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import graft.operators.Corpus
+    // a consumer that reads the flag: a bare count() needs no hit row,
+    // and the optimizer drops the left join onto the distinct hit ids
+    val safe = Corpus.decontaminateBloom(mixedCorpus, evalDocs, "text", "doc_id", n = 8)
+      .filter(col("contaminated") === 0L)
+    val n = safe.count()
+    val nodes = countPlanNodes(safe)
+    val names = nodes.map(_.nodeName)
+    assert(!nodes.exists(_.isInstanceOf[GenerateExec]), names)
+    assert(!nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[BloomFilterMightContain]))), names)
+    // only the count's global aggregate: the hit set's distinct is stored
+    assert(!nodes.exists {
+      case a: BaseAggregateExec => a.groupingExpressions.nonEmpty
+      case _ => false
+    }, names)
+    assert(safe.count() == n)
+  }
+
+  test("sampleToMixture: materialized rates == the unbarriered body (rows, schema) on edge corpora") {
+    import graft.operators.Corpus
+    val cases = Seq(
+      "null source and text" -> Seq("web" -> 0.6, "wiki" -> 0.3, "books" -> 0.1),
+      "target missing from corpus" -> Seq("web" -> 0.5, "news" -> 0.5),
+      "one source" -> Seq("wiki" -> 1.0))
+    cases.foreach { case (name, targets) =>
+      val got = Corpus.sampleToMixture(mixedCorpus, "text", "source", col("n_tok"), targets)
+      val want = sampleToMixtureUnbarriered(mixedCorpus, "text", "source", col("n_tok"), targets)
+      assert(got.schema == want.schema, name)
+      assert(rowBag(got) == rowBag(want), name)
+    }
+    assert(Corpus.sampleToMixture(mixedCorpus, "text", "source", col("n_tok"),
+      Seq("web" -> 0.5, "news" -> 0.5)).count() == 0L)
+    // rate 1 keeps every wiki doc but the null texts, which hash to null
+    assert(Corpus.sampleToMixture(mixedCorpus, "text", "source", col("n_tok"),
+      Seq("wiki" -> 1.0)).count() ==
+      mixedCorpus.filter(col("source") === "wiki" && col("text").isNotNull).count())
+  }
+
+  test("sampleToMixture: a second action reads the stored rates, no rate aggregate or capacity join") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import graft.operators.Corpus
+    val out = Corpus.sampleToMixture(mixedCorpus, "text", "source", col("n_tok"),
+      Seq("web" -> 0.6, "wiki" -> 0.4))
+    val n = out.count()
+    val nodes = countPlanNodes(out)
+    val names = nodes.map(_.nodeName)
+    assert(!nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]), names)
+    // the count's partial and final aggregates are all that is left: no
+    // per-source rate aggregate, no global capacity aggregate
+    assert(nodes.count(_.isInstanceOf[BaseAggregateExec]) == 2, names)
+    assert(out.count() == n)
   }
 
   test("Corpus.chunkDocuments splits with overlap and keeps short docs whole") {

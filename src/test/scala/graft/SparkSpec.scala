@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,8 +16,26 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Walks adaptive plans and their query stages like any other node. */
+  private object PlanNodes extends AdaptiveSparkPlanHelper {
+    def all(plan: SparkPlan): Seq[SparkPlan] = collect(plan) { case p => p }
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** `df`'s rows as a multiset. */
+  protected def rowBag(df: DataFrame): Map[Row, Int] =
+    df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+
+  /** Every physical node of the final plan that one more `count()` of `df`
+    * runs, adaptive query stages included: what a further consumer
+    * action re-executes on top of `df`. */
+  protected def countPlanNodes(df: DataFrame): Seq[SparkPlan] = {
+    val counted = df.groupBy().count()
+    counted.collect()
+    SparkSpec.PlanNodes.all(counted.queryExecution.executedPlan)
+  }
 }
