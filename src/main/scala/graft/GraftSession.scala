@@ -39,9 +39,10 @@ object GraftSession {
   /** Install graft's native function + optimizer surface on any session
     * (idempotent): every native SQL function in
     * `graft.expressions.Functions.all` (kepler_solve, word_shingles,
-    * minhash_sig, minhash_bands, xxminhash_bands, simhash_bits,
-    * dot_product, cross_correlate, argmax_pack, normalize_text — that
-    * registry is the source of truth, not this list) and the
+    * minhash_sig, minhash_bands and xxminhash_bands (one MinHashBands
+    * class, md5 and xxhash64 families), simhash_bits, dot_product,
+    * cross_correlate, argmax_pack, normalize_text — that registry is the
+    * source of truth, not this list) and the
     * rank-filter → TopKPerKey rewrite. Queries also self-install so the
     * driver contract works on externally-created sessions. */
   def install(spark: SparkSession): Unit = {

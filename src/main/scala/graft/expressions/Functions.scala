@@ -11,6 +11,11 @@ import org.apache.spark.sql.types.IntegerType
   * get the same codegen'd expressions the DataFrame operators use:
   *
   * {{{ SELECT minhash_sig(word_shingles(text, 3), 8) FROM docs }}}
+  *
+  * Names: kepler_solve, word_shingles, minhash_sig, minhash_bands,
+  * xxminhash_bands, simhash_bits, dot_product, cross_correlate,
+  * argmax_pack, normalize_text. A class may serve several names:
+  * MinHashBands is both band-key functions, one per hash family.
   */
 object Functions {
 
@@ -23,6 +28,14 @@ object Functions {
       s"$fn: $arg must be an integer literal, got $e")
   }
 
+  /** `<family>(text, hashes, bands, shingleN)`: one [[MinHashBands]]
+    * class serves both band-key names, each with its hash family. */
+  private def bands(family: MinHashFamily)(exprs: Seq[Expression]): Expression = {
+    val fn = family.sqlName
+    MinHashBands(exprs.head, litInt(exprs(1), fn, "hashes"), litInt(exprs(2), fn, "bands"),
+      litInt(exprs(3), fn, "shingleN"), family)
+  }
+
   private[graft] val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("kepler_solve", classOf[KeplerSolve],
       (exprs: Seq[Expression]) => KeplerSolve.coerced(exprs.head, exprs(1))),
@@ -30,16 +43,8 @@ object Functions {
       (exprs: Seq[Expression]) => WordShingles(exprs.head, litInt(exprs(1), "word_shingles", "n"))),
     ("minhash_sig", classOf[MinHashSig],
       (exprs: Seq[Expression]) => MinHashSig(exprs.head, litInt(exprs(1), "minhash_sig", "hashes"))),
-    ("minhash_bands", classOf[MinHashBands],
-      (exprs: Seq[Expression]) => MinHashBands(exprs.head,
-        litInt(exprs(1), "minhash_bands", "hashes"),
-        litInt(exprs(2), "minhash_bands", "bands"),
-        litInt(exprs(3), "minhash_bands", "shingleN"))),
-    ("xxminhash_bands", classOf[XxMinHashBands],
-      (exprs: Seq[Expression]) => XxMinHashBands(exprs.head,
-        litInt(exprs(1), "xxminhash_bands", "hashes"),
-        litInt(exprs(2), "xxminhash_bands", "bands"),
-        litInt(exprs(3), "xxminhash_bands", "shingleN"))),
+    ("minhash_bands", classOf[MinHashBands], bands(MinHashFamily.Md5Hex)),
+    ("xxminhash_bands", classOf[MinHashBands], bands(MinHashFamily.XxHash64)),
     ("simhash_bits", classOf[SimHashBits],
       (exprs: Seq[Expression]) => SimHashBits(exprs.head, litInt(exprs(1), "simhash_bits", "bits"))),
     ("dot_product", classOf[DotProduct],

@@ -1,7 +1,5 @@
 package graft.expressions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -18,9 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Value-identical to exploding shingles and taking
   * `min(substring(md5(sh), 1+4j, 4))` per doc — lexicographic order on
   * fixed-width lowercase hex equals numeric order on the 16-bit nibble
-  * value, so the mins are tracked as ints and formatted once at the end —
+  * value, so the mins are tracked as numbers and formatted once at the end —
   * but computed per row: the rows × shingles explode and its groupBy
-  * shuffle disappear; only per-doc band keys ever reach an exchange.
+  * shuffle disappear; only per-doc band keys ever reach an exchange. The
+  * per-shingle min update is [[MinHashFamily.Md5Hex]]'s, the same one
+  * `minhash_bands` runs over byte ranges of the text.
   */
 case class MinHashSig(child: Expression, hashes: Int) extends UnaryExpression {
   require(hashes >= 1 && hashes * 4 <= 32, "md5 slicing supports at most 8 components")
@@ -53,32 +53,20 @@ case class MinHashSig(child: Expression, hashes: Int) extends UnaryExpression {
 }
 
 object MinHashMath {
-  private val digests = ThreadLocal.withInitial[MessageDigest](() =>
-    MessageDigest.getInstance("MD5"))
-
   /** Null for an empty shingle array (no shingles → no signature). */
   def signature(shingles: ArrayData, hashes: Int): ArrayData = {
     val n = shingles.numElements()
     if (n == 0) return null
-    val md = digests.get()
-    val mins = Array.fill(hashes)(Int.MaxValue)
+    val mins = Array.fill(hashes)(Long.MaxValue)
     var i = 0
     while (i < n) {
       if (!shingles.isNullAt(i)) {
-        md.reset()
-        val digest = md.digest(shingles.getUTF8String(i).getBytes)
-        var j = 0
-        while (j < hashes) {
-          // hex chars [4j, 4j+4) = bytes 2j, 2j+1 as a 16-bit value;
-          // numeric order == lexicographic order of the hex substring
-          val v = ((digest(2 * j) & 0xff) << 8) | (digest(2 * j + 1) & 0xff)
-          if (v < mins(j)) mins(j) = v
-          j += 1
-        }
+        val bytes = shingles.getUTF8String(i).getBytes
+        MinHashFamily.Md5Hex.update(bytes, 0, bytes.length, mins)
       }
       i += 1
     }
-    if (mins(0) == Int.MaxValue) return null // all-null shingles
+    if (mins(0) == Long.MaxValue) return null // all-null shingles
     val out = new Array[Any](hashes)
     var j = 0
     while (j < hashes) {

@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.{MinHashBands, MinHashFamily}
 import graft.functions.{TextFns, VectorFns}
+import graft.sources.Tables
 
 /** Document deduplication operators (SURVEY.md §2.C).
   *
@@ -18,11 +20,6 @@ object Dedup {
   def exact(df: DataFrame, textCol: String, idCol: String): DataFrame =
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
-
-  /** Pre-shuffle only when the scan arrives with too few partitions to
-    * feed the cores — see Tables.parallelized. */
-  private def parallelized(df: DataFrame, idCol: String): DataFrame =
-    graft.sources.Tables.parallelized(df, idCol)
 
   /** Barrier for a CORPUS-SIZED working set (the one-call pipelines'
     * exact-deduped `unique` frame, and [[dedupCorpusBy]]'s survivors —
@@ -62,11 +59,26 @@ object Dedup {
     * same pipeline on xxhash64 longs for production scale.
     */
   def minhashLsh(df: DataFrame, textCol: String, idCol: String,
-                 numHashes: Int = 8, bands: Int = 2, shingleN: Int = 3): DataFrame = {
+                 numHashes: Int = 8, bands: Int = 2, shingleN: Int = 3): DataFrame =
+    lshPairs(df, textCol, idCol, numHashes, bands, shingleN, MinHashFamily.Md5Hex)
+
+  /** Scale-path MinHash+LSH: identical banded design to `minhashLsh` but
+    * each minhash component is `xxhash64(shingle, seed_i)` — one long hash
+    * per component instead of md5 slices, and each band key one xxhash64
+    * fold instead of an md5 over hex text. Use when DuckDB oracle parity is
+    * not required (xxhash64 has no DuckDB twin). */
+  def minhashLshFast(df: DataFrame, textCol: String, idCol: String,
+                     numHashes: Int = 8, bands: Int = 2, shingleN: Int = 3): DataFrame =
+    lshPairs(df, textCol, idCol, numHashes, bands, shingleN, MinHashFamily.XxHash64)
+
+  /** The band self-join of both LSH entry points: candidate pairs
+    * (a_id < b_id, distinct) of the docs sharing a `family` band key. */
+  private def lshPairs(df: DataFrame, textCol: String, idCol: String, numHashes: Int,
+                       bands: Int, shingleN: Int, family: MinHashFamily): DataFrame = {
     // ONE signature pass: both sides of the band self-join read the same
     // (doc, band) keys; without the barrier the shingle+minhash map stage
     // (the operator's dominant per-row cost) plans — and runs — twice
-    val bandDf = bandKeys(df, textCol, idCol, numHashes, bands, shingleN)
+    val bandDf = bandKeys(df, textCol, idCol, numHashes, bands, shingleN, family)
       .localCheckpoint(false)
     val a = bandDf.select(col("doc").as("a_id"), col("band"))
     val b = bandDf.select(col("doc").as("b_id"), col("band"))
@@ -74,62 +86,26 @@ object Dedup {
       .select("a_id", "b_id").distinct()
   }
 
-  /** (doc, band) md5-banded LSH keys of [[minhashLsh]]'s scheme — shared
-    * by the self-join path above and the DuckDB-parity mode of the
-    * asymmetric [[dedupIncremental]] batch-vs-corpus join. */
-  private def bandKeys(df: DataFrame, textCol: String, idCol: String,
-                       numHashes: Int, bands: Int, shingleN: Int): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
+  /** (doc, band) LSH keys in `family`'s banded scheme — shared by the
+    * self-join path above and the asymmetric [[dedupIncremental]]
+    * batch-vs-corpus join. */
+  private def bandKeys(df: DataFrame, textCol: String, idCol: String, numHashes: Int,
+                       bands: Int, shingleN: Int, family: MinHashFamily): DataFrame = {
     // No shingle-count pre-filter: MinHashBands returns null for texts
     // with fewer than shingleN words (split(" ", -1) word-count semantics,
     // identical to TextFns.words) and for null texts, and explode(null)
     // yields no rows — the same row set the former
     // size(words(text)) >= shingleN filter kept, without paying a full
     // split-to-string-array pass per row just to count words.
-    // The whole shingle → minhash → band-md5 chain is ONE fused native
-    // expression over the raw text bytes (no shingle-array
-    // materialization — each shingle is a byte range of the text);
-    // NativeExprParitySpec pins value-parity with the composed
-    // word_shingles + minhash_sig + md5(concat(…)) form.
-    parallelized(df, idCol)
+    // The whole shingle → minhash → band-key chain is ONE fused native
+    // projection over the raw text bytes (no shingle-array
+    // materialization — each shingle is a byte range of the text); the
+    // composed forms it replaced explode corpus × shingles rows through a
+    // groupBy(doc) exchange. NativeExprParitySpec pins value-parity with
+    // them for both families.
+    Tables.parallelized(df, idCol)
       .select(col(idCol).as("doc"),
-        explode(graft.expressions.MinHashBands.of(
-          col(textCol), numHashes, bands, shingleN)).as("band"))
-  }
-
-  /** Scale-path MinHash+LSH: identical banded design to `minhashLsh` but
-    * each minhash component is `xxhash64(shingle, seed_i)` — one codegen'd
-    * long hash per component instead of md5 hex-string slicing and string
-    * mins. ~an order of magnitude less per-shingle work; use when DuckDB
-    * oracle parity is not required (xxhash64 has no DuckDB twin). */
-  def minhashLshFast(df: DataFrame, textCol: String, idCol: String,
-                     numHashes: Int = 8, bands: Int = 2, shingleN: Int = 3): DataFrame = {
-    // same one-signature-pass barrier as minhashLsh
-    val bandDf = fastBandKeys(df, textCol, idCol, numHashes, bands, shingleN)
-      .localCheckpoint(false)
-    val a = bandDf.select(col("doc").as("a_id"), col("band"))
-    val b = bandDf.select(col("doc").as("b_id"), col("band"))
-    a.join(b, Seq("band")).filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-  }
-
-  /** (doc, band) LSH keys of `minhashLshFast`'s banded xxhash64 scheme —
-    * shared by the self-join path above and the asymmetric
-    * [[dedupIncremental]] batch-vs-corpus join. */
-  private def fastBandKeys(df: DataFrame, textCol: String, idCol: String,
-                           numHashes: Int, bands: Int, shingleN: Int): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    // ONE fused projection (XxMinHashBands) — the former explode(shingles)
-    // → min(xxhash64(sh, i)) groupBy(doc) shape shuffled corpus × shingles
-    // rows through a hash aggregate for work that never needed cross-row
-    // data; NativeExprParitySpec pins band-for-band value parity. Like
-    // bandKeys, no shingle-count pre-filter: the expression nulls out
-    // short/null texts and explode(null) drops the row — same row set,
-    // one split-to-count pass less.
-    parallelized(df, idCol)
-      .select(col(idCol).as("doc"),
-        explode(graft.expressions.XxMinHashBands.of(
-          col(textCol), numHashes, bands, shingleN)).as("band"))
+        explode(MinHashBands.of(col(textCol), numHashes, bands, shingleN, family)).as("band"))
   }
 
   /** SimHash fingerprint (`bits` ≤ 16): per distinct word, ±1 votes from
@@ -146,7 +122,7 @@ object Dedup {
     // null text has no word set, hence no fingerprint: drop the row
     // (mirrors the oracle, where unnest of a null split yields no rows)
     // instead of emitting a null-simhash group
-    parallelized(df.filter(col(textCol).isNotNull), idCol).select(
+    Tables.parallelized(df.filter(col(textCol).isNotNull), idCol).select(
       col(idCol).as("doc_id"),
       graft.expressions.SimHashBits.of(
         array_distinct(TextFns.words(col(textCol))), bits).as("simhash"))
@@ -453,8 +429,9 @@ object Dedup {
                   numHashes: Int = 8, bands: Int = 2, shingleN: Int = 3): DataFrame = {
     // exact pre-stage: keep one (min-id) copy per identical text FIRST.
     // The LSH stage would also pair exact copies — but only when they
-    // have >= shingleN words (fastBandKeys filters shorter docs), so
-    // identical short texts would otherwise both survive; it also
+    // have >= shingleN words (the band expression yields no keys for
+    // shorter docs), so identical short texts would otherwise both
+    // survive; it also
     // shrinks the LSH input for free.
     // `unique` is the working set of every following stage (band keys,
     // verify token sets, the final anti join) — materialize the exact
@@ -527,15 +504,18 @@ object Dedup {
     // `parity` swaps the xxhash64 band keys for the md5-sliced family so a
     // DuckDB oracle can replay the candidate stage verbatim (q113); the
     // production default stays the fast long-hash scheme.
-    def keys(d: DataFrame): DataFrame =
-      if (parity) bandKeys(d, textCol, idCol, numHashes, bands, shingleN)
-      else fastBandKeys(d, textCol, idCol, numHashes, bands, shingleN)
+    val family = if (parity) MinHashFamily.Md5Hex else MinHashFamily.XxHash64
     // ONE signature pass over the batch serves both candidate joins (the
     // within-batch LSH is definitionally the band-key self join, so
     // deriving it from the checkpointed keys changes nothing but the
     // pass count — the shingle+minhash map stage is the expensive part).
-    val nb = keys(fresh).select(col("doc").as("a_id"), col("band")).localCheckpoint(false)
-    val eb = keys(existing).select(col("doc").as("b_id"), col("band"))
+    // The barrier sits after the a_id rename (lshPairs' sits before
+    // it), so this self-join is its own: sharing lshPairs' would move
+    // the barrier and re-plan q113's candidate joins.
+    val nb = bandKeys(fresh, textCol, idCol, numHashes, bands, shingleN, family)
+      .select(col("doc").as("a_id"), col("band")).localCheckpoint(false)
+    val eb = bandKeys(existing, textCol, idCol, numHashes, bands, shingleN, family)
+      .select(col("doc").as("b_id"), col("band"))
     val candNE = nb.join(eb, Seq("band")).select("a_id", "b_id").distinct()
     val candNN = nb
       .join(nb.select(col("a_id").as("b_id"), col("band")), Seq("band"))
@@ -546,12 +526,18 @@ object Dedup {
     val verified = jaccardVerify(candNE.union(candNN).distinct(), both, textCol, idCol)
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id")
-    // Stage 3 — survivor policy: existing docs always win (they are the
-    // corpus). A batch doc survives iff its cluster holds no existing
-    // doc AND it is the cluster's min-id batch member (= cluster_id,
-    // since min-label propagation labels by global min and the cluster
-    // is all-new). Unpaired batch docs survive untouched.
-    val clusters = resolveClusters(verified)
+    keepNewSurvivors(fresh, existing, verified, idCol)
+  }
+
+  /** Stage 3 of the incremental paths — survivor policy: existing docs
+    * always win (they are the corpus). A batch doc survives iff its
+    * cluster holds no existing doc AND it is the cluster's min-id batch
+    * member (= cluster_id, since min-label propagation labels by global
+    * min and the cluster is all-new). Unpaired batch docs survive
+    * untouched. Returns `batch`'s surviving rows. */
+  private def keepNewSurvivors(batch: DataFrame, existing: DataFrame, pairs: DataFrame,
+                               idCol: String): DataFrame = {
+    val clusters = resolveClusters(pairs)
     val contaminated = clusters
       .join(existing.select(col(idCol).as("doc_id")), Seq("doc_id"), "leftsemi")
       .select("cluster_id").distinct()
@@ -560,7 +546,7 @@ object Dedup {
       .join(contaminated.withColumn("__c", lit(1L)), Seq("cluster_id"), "left")
       .filter(col("__c").isNotNull || col("doc_id") =!= col("cluster_id"))
       .select("doc_id")
-    fresh.join(dropNew, fresh(idCol) === dropNew("doc_id"), "left_anti")
+    batch.join(dropNew, batch(idCol) === dropNew("doc_id"), "left_anti")
   }
 
   /** EXACT all-pairs set-similarity join via prefix filtering (the
@@ -590,7 +576,7 @@ object Dedup {
   def similarityJoin(df: DataFrame, textCol: String, idCol: String,
                      tau: Double): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau must be in (0,1], got $tau")
-    val toks = parallelized(df, idCol)
+    val toks = Tables.parallelized(df, idCol)
       .select(col(idCol).as("doc"),
         explode(array_distinct(TextFns.words(col(textCol)))).as("w"))
     // Token frequency as a WINDOW over the token rows, not a separate
@@ -719,8 +705,12 @@ object Dedup {
       case r if r.isNullAt(0) => 0
       case r => math.max(0, r.getInt(0))
     }
-    math.max(1, 32 - Integer.numberOfLeadingZeros(math.max(1, maxId)))
+    bitWidth(maxId)
   }
+
+  /** Bits that hold every label in [0, maxId] (at least 1). */
+  private def bitWidth(maxId: Long): Int =
+    math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, maxId)))
 
   /** Shared survivor tail of the one-call dedup pipelines: resolve the
     * verified pair graph to clusters, drop every doc that is not its
@@ -752,13 +742,18 @@ object Dedup {
     * seeded-hyperplane bucketings (multi-table LSH) to recover recall lost
     * to finer buckets; candidate pairs are deduped across tables. */
   def byEmbedding(df: DataFrame, vecCol: String, idCol: String,
-                  threshold: Double, bits: Int = 4, tables: Int = 1): DataFrame = {
+                  threshold: Double, bits: Int = 4, tables: Int = 1): DataFrame =
     // one bucketing pass feeds both self-join sides (same barrier as
     // minhashLsh's band keys)
-    val withBucket = embeddingBuckets(df, vecCol, idCol, bits, tables)
-      .localCheckpoint(false)
-    val a = withBucket.select(col("id").as("a_id"), col("vec").as("a_vec"), col("bucket"))
-    val b = withBucket.select(col("id").as("b_id"), col("vec").as("b_vec"), col("bucket"))
+    bucketPairs(embeddingBuckets(df, vecCol, idCol, bits, tables).localCheckpoint(false),
+      threshold, tables)
+
+  /** (a_id, b_id, cosine) pairs (a_id < b_id, deduped across tables) of
+    * the vectors sharing a bucket in an (id, vec, bucket) frame, cosine
+    * at least `threshold` — the bucket self-join. */
+  private def bucketPairs(keys: DataFrame, threshold: Double, tables: Int): DataFrame = {
+    val a = keys.select(col("id").as("a_id"), col("vec").as("a_vec"), col("bucket"))
+    val b = keys.select(col("id").as("b_id"), col("vec").as("b_vec"), col("bucket"))
     val pairs = a.join(b, Seq("bucket")).filter(col("a_id") < col("b_id"))
     val distinctPairs = if (tables == 1) pairs else pairs.dropDuplicates("a_id", "b_id")
     distinctPairs
@@ -806,24 +801,8 @@ object Dedup {
       .select("a_id", "b_id")
     // within-batch pairs from the same checkpointed keys — value-identical
     // to byEmbedding(newDocs, …) (same buckets, same cosine, same dedup)
-    val nnPairs = nb.join(
-        nbk.select(col("id").as("b_id"), col("vec").as("b_vec"), col("bucket")),
-        Seq("bucket"))
-      .filter(col("a_id") < col("b_id"))
-    val candNN = (if (tables == 1) nnPairs else nnPairs.dropDuplicates("a_id", "b_id"))
-      .withColumn("cosine", VectorFns.cosine(col("a_vec"), col("b_vec")))
-      .filter(col("cosine") >= threshold)
-      .select("a_id", "b_id")
-    val clusters = resolveClusters(candNE.union(candNN).distinct())
-    val contaminated = clusters
-      .join(existing.select(col(idCol).as("doc_id")), Seq("doc_id"), "leftsemi")
-      .select("cluster_id").distinct()
-    val dropNew = clusters
-      .join(existing.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_anti")
-      .join(contaminated.withColumn("__c", lit(1L)), Seq("cluster_id"), "left")
-      .filter(col("__c").isNotNull || col("doc_id") =!= col("cluster_id"))
-      .select("doc_id")
-    newDocs.join(dropNew, newDocs(idCol) === dropNew("doc_id"), "left_anti")
+    val candNN = bucketPairs(nbk, threshold, tables).select("a_id", "b_id")
+    keepNewSurvivors(newDocs, existing, candNE.union(candNN).distinct(), idCol)
   }
 
   /** Near-duplicate pairs over a 64-bit FINGERPRINT column (SimHash,
@@ -900,9 +879,8 @@ object Dedup {
     * signal to raise k — the same contract as IVF list sizing.
     */
   def semanticPairs(df: DataFrame, vecCol: String, idCol: String,
-                    centroids: DataFrame, threshold: Double,
-                    labelBits: Int = 10): DataFrame =
-    pairsFromAssigned(assignNearest(df, vecCol, idCol, centroids, labelBits), threshold)
+                    centroids: DataFrame, threshold: Double): DataFrame =
+    pairsFromAssigned(assignNearest(df, vecCol, idCol, centroids), threshold)
 
   /** [[semanticPairs]] on the two-level assignment — the form for
     * codebooks too large to collect ([[assignNearestTwoLevel]]'s
@@ -938,8 +916,8 @@ object Dedup {
     * q89 practices and SemanticScaleSpec pins. Deterministic and
     * SQL-mirrorable (unlike a trained codebook); for unlabeled corpora use
     * [[semanticDedupAuto]], whose k-means k should scale the same way
-    * (k ≈ n/S). Returns the (cluster, centroid) frame plus the labelBits
-    * to pass to [[semanticPairs]]. */
+    * (k ≈ n/S). Returns the (cluster, centroid) frame plus the label bit
+    * width, the `clusterBits` of [[assignNearestTwoLevel]]. */
   def blockCentroids(df: DataFrame, vecCol: String, idCol: String,
                      labelCol: String, targetClusterSize: Int = 25): (DataFrame, Int) = {
     require(targetClusterSize >= 1, s"targetClusterSize must be >= 1, got $targetClusterSize")
@@ -949,7 +927,7 @@ object Dedup {
     require(l > 0, "blockCentroids: empty input")
     val b = math.max(1L, math.ceil(n.toDouble / (l * targetClusterSize.toDouble)).toLong)
     val nClusters = l * b
-    val labelBits = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, nClusters - 1)))
+    val labelBits = bitWidth(nClusters - 1)
     val cents = df
       .select(col(labelCol).as("__lab"), (col(idCol) % b).cast("int").as("__blk"),
         posexplode(col(vecCol)).as(Seq("__pos", "__comp")))
@@ -977,11 +955,9 @@ object Dedup {
     * FULL precision to the larger cluster id — exactly the oracle's
     * ORDER BY cosine DESC, assigned DESC (the old packed form collapsed
     * near-ties within ~2^-48; gate data's min assignment gap is 7.2e-6,
-    * so selections agree). `labelBits` is retained for API
-    * compatibility; assignment no longer packs the label. */
+    * so selections agree). */
   private[graft] def assignNearest(df: DataFrame, vecCol: String, idCol: String,
-                            centroids: DataFrame, labelBits: Int): DataFrame = {
-    val _ = labelBits
+                                   centroids: DataFrame): DataFrame = {
     val cents = centroids.select(col("cluster").cast("int").as("cluster"),
       col("centroid").cast("array<double>").as("centroid"))
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
@@ -1027,8 +1003,8 @@ object Dedup {
     * fit passes, cell keying, the non-empty-cell collect, plus the
     * auto-bits agg when `clusterBits` is left 0) — cache/localCheckpoint
     * expensively-derived codebooks before calling, and pass
-    * `clusterBits` when the caller already knows k (the semanticDedup
-    * paths forward their labelBits). */
+    * `clusterBits` when the caller already knows k ([[semanticDedup]]
+    * forwards its labelBits). */
   def assignNearestTwoLevel(df: DataFrame, vecCol: String, idCol: String,
                             centroids: DataFrame, coarseK: Int = 0,
                             clusterBits: Int = 0,
@@ -1101,25 +1077,20 @@ object Dedup {
 
   /** [[dedupCorpus]] with SemDeDup blocking: semantic pairs above
     * `threshold` → connected components → min-id survivor per cluster →
-    * the corpus with semantic duplicates dropped. `labelBits` must
-    * cover the codebook's max cluster id on BOTH paths (the two-level
-    * path packs with it too; an undersized value throws loudly from
-    * ArgMaxPack, never a silent wrong argmax) — leave it 0 to auto-size
-    * from the codebook (one tiny agg; cache/localCheckpoint an
-    * expensively-derived centroid frame first), or pass the known width
-    * as [[semanticDedupAuto]] does from k. */
+    * the corpus with semantic duplicates dropped. `labelBits` is the
+    * two-level path's packed-label width (the flat path packs no label):
+    * it must cover the codebook's max cluster id (an undersized value
+    * throws loudly from ArgMaxPack, never a silent wrong argmax) — leave
+    * it 0 to auto-size from the codebook (one tiny agg; cache/
+    * localCheckpoint an expensively-derived centroid frame first), or
+    * pass the known width as [[semanticDedupAuto]] does from k. */
   def semanticDedup(df: DataFrame, vecCol: String, idCol: String,
                     centroids: DataFrame, threshold: Double,
                     labelBits: Int = 0, twoLevel: Boolean = false): DataFrame = {
-    // labelBits = 0 ⇒ auto-size from the codebook, so a default-argument
-    // caller with > 2^bits clusters can never hit an undersized pack on
-    // EITHER path; explicit labelBits is forwarded so the two-level
-    // auto-sizing agg never re-evaluates an uncached codebook
-    val bits = if (labelBits > 0) labelBits else autoBits(centroids)
     val pairs =
       if (twoLevel) semanticPairsTwoLevel(df, vecCol, idCol, centroids, threshold,
-        clusterBits = bits)
-      else semanticPairs(df, vecCol, idCol, centroids, threshold, bits)
+        clusterBits = labelBits)
+      else semanticPairs(df, vecCol, idCol, centroids, threshold)
     dropLosers(df, pairs.select("a_id", "b_id"), idCol)
   }
 
@@ -1140,9 +1111,8 @@ object Dedup {
     // passes nothing downstream reads) and settle for 2 seeding rounds
     val model = KMeans.fit(df, idCol, vecCol, k, maxIters,
       diagnostics = false, seedRounds = 2)
-    val labelBits = math.max(1, 32 - Integer.numberOfLeadingZeros(math.max(1, k - 1)))
     semanticDedup(df, vecCol, idCol,
-      model.centroids.select("cluster", "centroid"), threshold, labelBits,
+      model.centroids.select("cluster", "centroid"), threshold, bitWidth(k - 1),
       twoLevel = k > MaxLocalCodebook)
   }
 
@@ -1160,11 +1130,9 @@ object Dedup {
                          k: Int, threshold: Double, iters: Int): DataFrame = {
     val model = KMeans.fit(df, idCol, vecCol, k, maxIters = iters, tol = 0.0,
       diagnostics = false, init = KMeans.FirstIds)
-    val labelBits = math.max(1, 32 - Integer.numberOfLeadingZeros(math.max(1, k - 1)))
     // always the flat path: this is the ORACLE-mirrorable form, and its
     // KMeans.fit already holds k on the driver (oracle-checkable k is
     // small by construction)
-    semanticDedup(df, vecCol, idCol,
-      model.centroids.select("cluster", "centroid"), threshold, labelBits)
+    semanticDedup(df, vecCol, idCol, model.centroids.select("cluster", "centroid"), threshold)
   }
 }

@@ -376,10 +376,10 @@ object VectorQueries {
     "q89_semantic_dedup",
     (s, dir) => {
       val e = emb(s, dir)
-      val (centroids, labelBits) = graft.operators.Dedup.blockCentroids(
+      val (centroids, _) = graft.operators.Dedup.blockCentroids(
         e, "embedding", "vec_id", "label", targetClusterSize = 25)
       val pairs = graft.operators.Dedup.semanticPairs(
-        e, "embedding", "vec_id", centroids, threshold = 0.4, labelBits = labelBits)
+        e, "embedding", "vec_id", centroids, threshold = 0.4)
       graft.operators.Dedup.survivors(e, pairs.select("a_id", "b_id"), "vec_id")
         .withColumnRenamed("doc_id", "vec_id")
     },
@@ -885,7 +885,7 @@ object VectorQueries {
       // coarse fit, cell keying, non-empty collect) — pin it once
       val cents = centroids.localCheckpoint(false)
       val flat = graft.operators.Dedup
-        .assignNearest(e, "embedding", "vec_id", cents, labelBits)
+        .assignNearest(e, "embedding", "vec_id", cents)
         .select(col("id").as("vec_id"), col("cluster").as("flat_cl"))
       val two = graft.operators.Dedup
         .assignNearestTwoLevel(e, "embedding", "vec_id", cents,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType, StructField, StructType}
 
-import graft.expressions.{MinHashSig, SimHashBits, WordShingles}
+import graft.expressions.{MinHashBands, MinHashFamily, MinHashSig, SimHashBits, WordShingles}
 import graft.functions.TextFns
 import graft.operators.Toa
 
@@ -72,12 +72,11 @@ class NativeExprParitySpec extends SparkSpec {
   }
 
   test("MinHashBands == word_shingles + minhash_sig + md5(concat(sig slices)) on random docs") {
-    import graft.expressions.MinHashBands
     val (numHashes, bands, n) = (8, 2, 3)
     val perBand = numHashes / bands
     val eligible = docs.filter(size(TextFns.words(col("text"))) >= n)
     val native = eligible.select(col("doc_id"),
-      MinHashBands.of(col("text"), numHashes, bands, n).as("bk"))
+      MinHashBands.of(col("text"), numHashes, bands, n, MinHashFamily.Md5Hex).as("bk"))
       .as[(Long, Seq[String])].collect().toMap
     val sig = MinHashSig.of(TextFns.shingles(col("text"), n), numHashes)
     val composed = eligible.select(col("doc_id"), sig.as("sig"))
@@ -92,10 +91,9 @@ class NativeExprParitySpec extends SparkSpec {
   }
 
   test("explode(bands) drops exactly the docs a words-count pre-filter would") {
-    // bandKeys/fastBandKeys rely on this in place of the former
-    // size(words(text)) >= n filter: short and null texts must vanish
-    // from the exploded band rows, nothing else may.
-    import graft.expressions.{MinHashBands, XxMinHashBands}
+    // Dedup's bandKeys relies on this, for both hash families, in place
+    // of the former size(words(text)) >= n filter: short and null texts
+    // must vanish from the exploded band rows, nothing else may.
     val n = 3
     val withEdge = docs.union(Seq(
       (9001L, "two words"), (9002L, ""), (9003L, null.asInstanceOf[String]),
@@ -103,10 +101,10 @@ class NativeExprParitySpec extends SparkSpec {
     val kept = withEdge.filter(size(TextFns.words(col("text"))) >= n)
       .select("doc_id").as[Long].collect().toSet
     val viaMd5 = withEdge.select(col("doc_id"),
-        explode(MinHashBands.of(col("text"), 8, 2, n)).as("b"))
+        explode(MinHashBands.of(col("text"), 8, 2, n, MinHashFamily.Md5Hex)).as("b"))
       .select("doc_id").distinct().as[Long].collect().toSet
     val viaXx = withEdge.select(col("doc_id"),
-        explode(XxMinHashBands.of(col("text"), 8, 2, n)).as("b"))
+        explode(MinHashBands.of(col("text"), 8, 2, n, MinHashFamily.XxHash64)).as("b"))
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(viaMd5 == kept)
     assert(viaXx == kept)
@@ -115,12 +113,11 @@ class NativeExprParitySpec extends SparkSpec {
   }
 
   test("XxMinHashBands == explode + min(xxhash64(sh, i)) + xxhash64 band fold on random docs") {
-    import graft.expressions.XxMinHashBands
     val (numHashes, bands, n) = (8, 2, 3)
     val perBand = numHashes / bands
     val eligible = docs.filter(size(TextFns.words(col("text"))) >= n)
     val native = eligible.select(col("doc_id"),
-      XxMinHashBands.of(col("text"), numHashes, bands, n).as("bk"))
+      MinHashBands.of(col("text"), numHashes, bands, n, MinHashFamily.XxHash64).as("bk"))
       .as[(Long, Seq[Long])].collect().toMap
     val sh = eligible.select(col("doc_id").as("doc"),
       explode(TextFns.shingles(col("text"), n)).as("sh"))
@@ -328,10 +325,9 @@ class NativeExprParitySpec extends SparkSpec {
     }
   }
 
-  test("XxMinHashBands codegen'd and interpreted both equal the explode/fold reference (scalacheck)") {
+  test("MinHashBands (md5 and xxhash64 families) and MinHashSig codegen'd and interpreted both equal builtin explode/fold references (scalacheck)") {
     import org.scalacheck.{Gen, Prop, Test => Check}
     import org.scalacheck.rng.Seed
-    import graft.expressions.XxMinHashBands
     val schema = StructType(Seq(StructField("id", IntegerType), StructField("text", StringType)))
     val word = Gen.oneOf(vocab)
     // null, empty, one-word and unicode docs; shingle widths up to 9, past
@@ -340,32 +336,45 @@ class NativeExprParitySpec extends SparkSpec {
       1 -> Gen.const(null), 1 -> Gen.const(""), 2 -> word,
       6 -> Gen.choose(2, 14).flatMap(k => Gen.listOfN(k, word)).map(_.mkString(" ")))
     val shape = Gen.zip(Gen.oneOf((8, 2), (4, 1), (6, 3)), Gen.choose(1, 9))
-    val batches = Gen.zip(shape, Gen.listOfN(40, doc))
+    val family = Gen.oneOf[MinHashFamily](MinHashFamily.Md5Hex, MinHashFamily.XxHash64)
+    val batches = Gen.zip(family, shape, Gen.listOfN(40, doc))
     inBothCodegenModes { mode =>
-      val prop = Prop.forAllNoShrink(batches) { case (((hashes, bands), n), texts) =>
+      val seen = scala.collection.mutable.Set[MinHashFamily]()
+      val prop = Prop.forAllNoShrink(batches) { case (fam, ((hashes, bands), n), texts) =>
+        seen += fam
+        val isMd5 = fam == MinHashFamily.Md5Hex
         val df = spark.createDataFrame(spark.sparkContext.parallelize(
           texts.zipWithIndex.map { case (t, i) => Row(i, t) }, 2), schema)
-        val native = df.select(col("id"), XxMinHashBands.of(col("text"), hashes, bands, n))
-          .collect().map(r => r.getInt(0) -> Option(r.getSeq[Long](1)).map(_.toSeq)).toMap
+        def byId(out: DataFrame): Map[Int, Seq[Any]] =
+          out.collect().collect { case r if !r.isNullAt(1) => r.getInt(0) -> r.getSeq[Any](1).toSeq }.toMap
+        val native = byId(df.select(col("id"), MinHashBands.of(col("text"), hashes, bands, n, fam)))
         // builtin shingles (no native expression), explode, per-component
-        // min(xxhash64(sh, i)), xxhash64 fold per band; no shingle → null
+        // min — min(substring(md5(sh), 1+4i, 4)) or min(xxhash64(sh, i)) —
+        // then per band md5(concat(…)) or the xxhash64 fold; no shingle → null
         val ws = split(col("text"), " ")
         val len = greatest(size(ws) - lit(n - 1), lit(0))
         val shingles = (0 until n).map(o => slice(ws, lit(o + 1), len))
           .reduce((acc, p) => zip_with(acc, p, (a, b) => concat(a, lit(" "), b)))
         val perBand = hashes / bands
-        val mins = (0 until hashes).map(i => min(xxhash64(col("sh"), lit(i))).as(s"h$i"))
-        val reference = df.select(col("id"), explode(shingles).as("sh"))
+        val mins = (0 until hashes).map { i =>
+          (if (isMd5) min(substring(md5(col("sh")), 1 + 4 * i, 4))
+           else min(xxhash64(col("sh"), lit(i)))).as(s"h$i")
+        }
+        val components = df.select(col("id"), explode(shingles).as("sh"))
           .groupBy("id").agg(mins.head, mins.tail: _*)
-          .select(col("id"), array((0 until bands).map { b =>
-            xxhash64((b * perBand until (b + 1) * perBand).map(i => col(s"h$i")): _*)
-          }: _*))
-          .collect().map(r => r.getInt(0) -> r.getSeq[Long](1).toSeq).toMap
-        native == texts.indices.map(i => i -> reference.get(i)).toMap
+        val reference = byId(components.select(col("id"), array((0 until bands).map { b =>
+          val cs = (b * perBand until (b + 1) * perBand).map(i => col(s"h$i"))
+          if (isMd5) md5(concat(cs: _*)) else xxhash64(cs: _*)
+        }: _*)))
+        // minhash_sig over the same builtin shingles is the md5 components
+        lazy val sigOk = byId(df.select(col("id"), MinHashSig.of(shingles, hashes))) ==
+          byId(components.select(col("id"), array((0 until hashes).map(i => col(s"h$i")): _*)))
+        native == reference && (!isMd5 || sigOk)
       }
       val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(12)
         .withInitialSeed(Seed(5L)).withWorkers(1), prop)
       assert(result.passed, s"$mode: $result")
+      assert(seen == Set(MinHashFamily.Md5Hex, MinHashFamily.XxHash64), s"$mode: families $seen")
     }
   }
 }

@@ -30,7 +30,7 @@ class SemanticDedupSpec extends SparkSpec {
 
   test("semanticPairs finds within-cluster near-dups and only those") {
     val pairs = Dedup.semanticPairs(vecs, "embedding", "vec_id", centroids,
-        threshold = 0.98, labelBits = 4)
+        threshold = 0.98)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(pairs === Set((1L, 2L), (4L, 5L)),
       "planted same-cluster pairs found; far doc 3 pairs with nothing")
@@ -41,24 +41,24 @@ class SemanticDedupSpec extends SparkSpec {
     // disclosed SemDeDup recall loss at cluster boundaries (raise k /
     // overlap clusters to trade cost for recall)
     val pairs = Dedup.semanticPairs(vecs, "embedding", "vec_id", centroids,
-        threshold = 0.98, labelBits = 4)
+        threshold = 0.98)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(!pairs.contains((6L, 7L)))
   }
 
   test("semanticDedup drops the larger id of each pair, keeps everything else") {
     val kept = Dedup.semanticDedup(vecs, "embedding", "vec_id", centroids,
-        threshold = 0.98, labelBits = 4)
+        threshold = 0.98)
       .select("vec_id").as[Long].collect().toSet
     assert(kept === Set(1L, 3L, 4L, 6L, 7L))
   }
 
   test("semanticPairs is repartition-invariant") {
     val a = Dedup.semanticPairs(vecs.repartition(7), "embedding", "vec_id",
-        centroids, threshold = 0.98, labelBits = 4)
+        centroids, threshold = 0.98)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     val b = Dedup.semanticPairs(vecs.coalesce(1), "embedding", "vec_id",
-        centroids, threshold = 0.98, labelBits = 4)
+        centroids, threshold = 0.98)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(a === b)
   }

@@ -37,8 +37,8 @@ class SemanticScaleSpec extends SparkSpec {
     * q89 parameterization at corpus size n. */
   private def stats(n: Int): (Long, Long, Long) = {
     val df = corpus(n)
-    val (cents, bits) = Dedup.blockCentroids(df, "embedding", "vec_id", "label", Target)
-    val sizes = Dedup.assignNearest(df, "embedding", "vec_id", cents, bits)
+    val (cents, _) = Dedup.blockCentroids(df, "embedding", "vec_id", "label", Target)
+    val sizes = Dedup.assignNearest(df, "embedding", "vec_id", cents)
       .groupBy("cluster").agg(count(lit(1)).as("c"))
       .select("c").as[Long].collect()
     (cents.count(), sizes.max, sizes.map(c => c * c).sum)
@@ -119,8 +119,8 @@ class SemanticScaleSpec extends SparkSpec {
   test("two-level assignment agrees with flat when centroids are separated") {
     val df = separated(2000)
     // Target 125 -> B = 1 block/label: centroids are the 16 label means
-    val (cents, bits) = Dedup.blockCentroids(df, "embedding", "vec_id", "label", 125)
-    val flat = Dedup.assignNearest(df, "embedding", "vec_id", cents, bits)
+    val (cents, _) = Dedup.blockCentroids(df, "embedding", "vec_id", "label", 125)
+    val flat = Dedup.assignNearest(df, "embedding", "vec_id", cents)
       .select(col("id"), col("cluster").as("flat_cluster"))
     val two = Dedup.assignNearestTwoLevel(df, "embedding", "vec_id", cents)
       .select(col("id"), col("cluster").as("two_cluster"))
@@ -136,8 +136,8 @@ class SemanticScaleSpec extends SparkSpec {
 
   test("semanticPairsTwoLevel pairs are a high-recall subset of the flat pairs") {
     val df = separated(800)
-    val (cents, bits) = Dedup.blockCentroids(df, "embedding", "vec_id", "label", 50)
-    val flatPairs = Dedup.semanticPairs(df, "embedding", "vec_id", cents, 0.8, bits)
+    val (cents, _) = Dedup.blockCentroids(df, "embedding", "vec_id", "label", 50)
+    val flatPairs = Dedup.semanticPairs(df, "embedding", "vec_id", cents, 0.8)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     val twoPairs = Dedup.semanticPairsTwoLevel(df, "embedding", "vec_id", cents, 0.8)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
