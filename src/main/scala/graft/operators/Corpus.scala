@@ -18,7 +18,10 @@ object Corpus {
     * BELOW "fabc…"), and rate ≤ 0 must keep nothing (%04x on a negative
     * int emits an 8-char two's-complement string like "ffffe667" that
     * every md5 prefix sorts below — the maximal wrong answer for a
-    * slightly-negative computed mixture weight). */
+    * slightly-negative computed mixture weight). A null text has no md5
+    * prefix, so its compare is null at every threshold: [[sampleByHash]]
+    * never keeps it (not even at rate 1) and [[assignSplits]] sends it to
+    * the default split. */
   private def hexThreshold(rate: Column): Column =
     when(rate >= 1.0, lit("g"))
       .when(rate <= 0.0, lit("0000"))
@@ -32,7 +35,10 @@ object Corpus {
     * Column in [0,1] (domain-mixture weights: different rates per
     * source/language/quality tier). Resolution is 1/65536; the compare
     * is on the lowercase hex prefix, so any engine with md5 reproduces
-    * the exact sample. Pure map stage — no shuffle, fully pushdown-able. */
+    * the exact sample. Pure map stage — no shuffle, fully pushdown-able.
+    *
+    * A null text has no hash and is never kept, at any rate (1 included);
+    * DuckDB's `md5(NULL) < …` drops it the same way. */
   def sampleByHash(df: DataFrame, textCol: String, rate: Column): DataFrame =
     df.filter(substring(md5(col(textCol)), 1, 4) < hexThreshold(rate))
 
@@ -105,7 +111,8 @@ object Corpus {
     * scan and its capacity cross join each time. The barrier sits on the
     * rates, not the corpus, so a consumer's `select(idCol)` still prunes
     * the corpus scan; the broadcast join stays — nothing large shuffles.
-    * Batch only, like the aggregate it stores. */
+    * Batch only, like the aggregate it stores. Null-text docs are never
+    * kept, whatever their source's rate (see [[sampleByHash]]). */
   def sampleToMixture(df: DataFrame, textCol: String, sourceCol: String,
                       tokensCol: Column, targets: Seq[(String, Double)]): DataFrame = {
     val rates = mixtureRates(df, sourceCol, tokensCol, targets)

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.expressions.{MinHashBands, MinHashFamily}
 import graft.functions.{TextFns, VectorFns}
-import graft.sources.Tables
 
 /** Document deduplication operators (SURVEY.md §2.C).
   *
@@ -13,6 +12,10 @@ import graft.sources.Tables
   * compared inside a shared bucket (hash group, LSH band, sign bucket), so
   * there is never an O(n²) cross join. Each stage is one explode+groupBy
   * (a single shuffle keyed on doc or bucket id).
+  *
+  * No operator here repartitions its input: feed them a spread frame
+  * (`Tables.documents(spark, dir, spread = true)`) when the scan arrives
+  * with too few splits for the per-row shingle/tokenize work.
   */
 object Dedup {
 
@@ -103,9 +106,8 @@ object Dedup {
     // composed forms it replaced explode corpus × shingles rows through a
     // groupBy(doc) exchange. NativeExprParitySpec pins value-parity with
     // them for both families.
-    Tables.parallelized(df, idCol)
-      .select(col(idCol).as("doc"),
-        explode(MinHashBands.of(col(textCol), numHashes, bands, shingleN, family)).as("band"))
+    df.select(col(idCol).as("doc"),
+      explode(MinHashBands.of(col(textCol), numHashes, bands, shingleN, family)).as("band"))
   }
 
   /** SimHash fingerprint (`bits` ≤ 16): per distinct word, ±1 votes from
@@ -122,7 +124,7 @@ object Dedup {
     // null text has no word set, hence no fingerprint: drop the row
     // (mirrors the oracle, where unnest of a null split yields no rows)
     // instead of emitting a null-simhash group
-    Tables.parallelized(df.filter(col(textCol).isNotNull), idCol).select(
+    df.filter(col(textCol).isNotNull).select(
       col(idCol).as("doc_id"),
       graft.expressions.SimHashBits.of(
         array_distinct(TextFns.words(col(textCol))), bits).as("simhash"))
@@ -576,9 +578,8 @@ object Dedup {
   def similarityJoin(df: DataFrame, textCol: String, idCol: String,
                      tau: Double): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau must be in (0,1], got $tau")
-    val toks = Tables.parallelized(df, idCol)
-      .select(col(idCol).as("doc"),
-        explode(array_distinct(TextFns.words(col(textCol)))).as("w"))
+    val toks = df.select(col(idCol).as("doc"),
+      explode(array_distinct(TextFns.words(col(textCol)))).as("w"))
     // Token frequency as a WINDOW over the token rows, not a separate
     // aggregate joined back: the join form planted `toks` (the corpus
     // tokenize+explode) twice in the plan — Spark does not CSE — and

@@ -36,7 +36,7 @@ object Queries {
     (s, dir) => {
       // the five decimal partial sums dominate; a single-split local
       // scan would run them serially (no-op on a pre-split cluster scan)
-      Tables.parallelized(Tables.lineitem(s, dir), "l_orderkey")
+      Tables.lineitem(s, dir, spread = true)
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -312,7 +312,7 @@ object Queries {
     "q58_profile_columns",
     (s, dir) =>
       graft.operators.Profile.numeric(
-        Tables.parallelized(Tables.lineitem(s, dir), "l_orderkey"),
+        Tables.lineitem(s, dir, spread = true),
         Seq("l_orderkey", "l_quantity", "l_extendedprice", "l_discount")),
     Some("""
       SELECT 'l_orderkey' AS col_name, COUNT(*) AS n_rows, COUNT(l_orderkey) AS n_present,
@@ -353,7 +353,7 @@ object Queries {
       "q62_correlation",
       (s, dir) =>
         // six decimal moment sums fused into the scan — spread the scan
-        Tables.parallelized(Tables.lineitem(s, dir), "l_orderkey")
+        Tables.lineitem(s, dir, spread = true)
           .groupBy("l_returnflag")
           .agg(
             count(lit(1)).as("n"),
@@ -614,7 +614,7 @@ object Queries {
     "q137_weighted_quantiles",
     (s, dir) => {
       import graft.operators.Profile
-      val e = Tables.parallelized(Tables.events(s, dir), "event_id")
+      val e = Tables.events(s, dir, spread = true)
         .withColumn("w", lit(1L) + pmod(col("event_id"), lit(10L)))
       Profile.weightedQuantiles(e, Seq("event_type"), "value", "w",
           quantiles = Seq((1, 2), (9, 10), (99, 100)), tieCols = Seq("event_id"))
@@ -655,7 +655,7 @@ object Queries {
     * IEEE float aggregation should write this form. */
   def fastVariants: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_profile_stats_fast" -> ((s, dir) => {
-      Tables.parallelized(Tables.lineitem(s, dir), "l_orderkey")
+      Tables.lineitem(s, dir, spread = true)
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -671,7 +671,7 @@ object Queries {
     "q62_correlation_fast" -> ((s, dir) => {
       val x = col("l_quantity")
       val y = col("l_extendedprice")
-      Tables.parallelized(Tables.lineitem(s, dir), "l_orderkey")
+      Tables.lineitem(s, dir, spread = true)
         .groupBy("l_returnflag")
         .agg(
           count(lit(1)).as("n"),
@@ -688,7 +688,7 @@ object Queries {
     // exact multi-distinct Expand — same single scan, mergeable partials
     "q58_profile_columns_fast" -> ((s, dir) =>
       graft.operators.Profile.numeric(
-        Tables.parallelized(Tables.lineitem(s, dir), "l_orderkey"),
+        Tables.lineitem(s, dir, spread = true),
         Seq("l_orderkey", "l_quantity", "l_extendedprice", "l_discount"),
         approx = true)),
     // the production substring-dedup path: 8-byte xxhash64 gram keys at
@@ -696,11 +696,15 @@ object Queries {
     // ~n²/2⁶⁵ — see SubstringDedup)
     "q66_dup_spans_fast" -> ((s, dir) =>
       graft.operators.SubstringDedup.spanStats(
-        Tables.parallelized(Tables.documents(s, dir), "doc_id"),
+        Tables.documents(s, dir, spread = true),
         "text", "doc_id", k = 8, hashKeys = true)),
     "q40_embedding_stats_fast" -> ((s, dir) => {
       import graft.functions.VectorFns
-      Tables.parallelized(Tables.embeddings(s, dir), "vec_id")
+      // 8 MB floor, not the embeddings loader's 2 MB: one cheap dot per
+      // row does not pay for the exchange. At sf1 (5.9 MB, 4 cores) the
+      // 2 MB spread measured 0.36 -> 0.59 s (median of 4 interleaved
+      // pairs, per-pair ratios 1.05-2.14; q05/q06/q08 band 0.89-1.35).
+      Tables.parallelized(Tables.embeddings(s, dir), "vec_id", Tables.PlainMinBytes)
         .withColumn("nrm", sqrt(VectorFns.dot(col("embedding"), col("embedding"))))
         .withColumn("c1", element_at(col("embedding"), 1).cast("double"))
         .groupBy("label")

@@ -445,7 +445,7 @@ object SignalQueries {
       (s, dir) => {
         graft.expressions.KeplerSolve.register(s)
         val twoPi = 2.0 * math.Pi
-        Tables.parallelized(Tables.events(s, dir), "event_id")
+        Tables.events(s, dir, spread = true)
           .withColumn("m_rad",
             Orbital.meanOrbits(Orbital.mjd(col("ts")), pbDays = 0.1025, t0Mjd = 60310.0) * lit(twoPi))
           .withColumn("ecc_anom", expr("kepler_solve(m_rad, 0.3)"))
@@ -779,7 +779,7 @@ object SignalQueries {
       val y = cents(col("value"))
       // the four decimal partial sums are the hot path; a single-file
       // local scan would run them on one core (no-op on a cluster scan)
-      Tables.parallelized(Tables.events(s, dir), "event_id")
+      Tables.events(s, dir, spread = true)
         .groupBy("event_type")
         .agg(
           count(lit(1)).as("n"),
@@ -837,7 +837,7 @@ object SignalQueries {
     (s, dir) => {
       import graft.functions.{Signal => Sig}
       val nbin = 16
-      val binned = Tables.parallelized(Tables.events(s, dir), "event_id")
+      val binned = Tables.events(s, dir, spread = true)
         .withColumn("bin", pmod(col("event_id"), lit(nbin.toLong)))
         .groupBy("user_id", "bin")
         .agg(
@@ -1126,7 +1126,7 @@ object SignalQueries {
       val chans = grid.toSeq.zipWithIndex
         .map { case (f, i) => (i.toLong, f) }.toDF("chan", "freq")
       val kept = col("freq") >= 960.0 && col("freq") <= 1600.0
-      Tables.parallelized(Tables.events(s, dir), "event_id")
+      Tables.events(s, dir, spread = true)
         .withColumn("chan", pmod(col("event_id"), lit(928L)))
         .join(broadcast(chans), "chan")
         .groupBy("event_type")
@@ -1293,7 +1293,7 @@ object SignalQueries {
   private lazy val q146 = Q(
     "q146_residual_ingest",
     (s, dir) => {
-      val e = Tables.parallelized(Tables.events(s, dir), "event_id")
+      val e = Tables.events(s, dir, spread = true)
         .filter(col("value").isNotNull && col("event_id").isNotNull)
         .select(col("event_id"), col("event_type"), col("value"))
       val line = concat_ws(" ",
@@ -1460,7 +1460,7 @@ object SignalQueries {
   private lazy val q148 = Q(
     "q148_dynspec_zap",
     (s, dir) => {
-      val e = Tables.parallelized(Tables.events(s, dir), "event_id")
+      val e = Tables.events(s, dir, spread = true)
         .filter(col("event_id").isNotNull && col("value").isNotNull)
         .select(col("event_id"), col("value"))
       val eid = col("event_id")
@@ -1561,7 +1561,7 @@ object SignalQueries {
   private lazy val q149 = Q(
     "q149_fits_cards",
     (s, dir) => {
-      val e = Tables.parallelized(Tables.events(s, dir), "event_id")
+      val e = Tables.events(s, dir, spread = true)
         .filter(col("event_id").isNotNull && col("value").isNotNull)
         .select(col("event_id"), col("value"))
       val eid = col("event_id")
@@ -1698,7 +1698,7 @@ object SignalQueries {
   private lazy val q121 = Q(
     "q121_poln_cal",
     (s, dir) => {
-      val obs = Tables.parallelized(Tables.events(s, dir), "event_id")
+      val obs = Tables.events(s, dir, spread = true)
         .select(col("event_id"), (col("event_id") % 64).as("channel"),
           (abs(col("value")) + lit(1.0)).as("stokes_i"),
           (col("value") * lit(0.5)).as("stokes_q"),
@@ -2630,7 +2630,7 @@ object SignalQueries {
     (s, dir) => {
       import graft.operators.Toa
       val nbin = 8
-      val e = Tables.parallelized(Tables.events(s, dir), "event_id")
+      val e = Tables.events(s, dir, spread = true)
         .select(col("user_id"),
           pmod(col("event_id"), lit(nbin.toLong)).as("bin"),
           col("value"), unix_micros(col("ts")).as("tus"))
@@ -2738,7 +2738,7 @@ object SignalQueries {
     "q128_timing_fit",
     (s, dir) => {
       import graft.operators.TimingFit
-      val e = Tables.parallelized(Tables.events(s, dir), "event_id")
+      val e = Tables.events(s, dir, spread = true)
         .filter(col("value").isNotNull)
         .select(col("event_type"),
           // FULLY integer grid (covariate, weight, response): every per-row
@@ -2829,7 +2829,7 @@ object SignalQueries {
     "q131_fit_residuals",
     (s, dir) => {
       import graft.operators.TimingFit
-      val e = Tables.parallelized(Tables.events(s, dir), "event_id")
+      val e = Tables.events(s, dir, spread = true)
         .filter(col("value").isNotNull)
         .select(col("event_type"),
           pmod(col("event_id"), lit(13L)).cast("double").as("x1"),
@@ -2920,7 +2920,7 @@ object SignalQueries {
     (s, dir) => {
       import graft.operators.{TimingFit, Toa}
       val nbin = 8
-      val e = Tables.parallelized(Tables.events(s, dir), "event_id")
+      val e = Tables.events(s, dir, spread = true)
         .select(col("user_id"),
           pmod(col("event_id"), lit(nbin.toLong)).as("bin"),
           col("value"), unix_micros(col("ts")).as("tus"))

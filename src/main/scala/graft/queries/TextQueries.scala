@@ -26,7 +26,7 @@ object TextQueries {
   private val q31 = Q(
     "q31_minhash_lsh",
     (s, dir) => Dedup.minhashLsh(
-      Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes),
+      Tables.documents(s, dir, spread = true),
       "text", "doc_id"),
     Some("""
       WITH sh AS (
@@ -63,7 +63,7 @@ object TextQueries {
       "q32_simhash",
       (s, dir) =>
         Dedup.simhash(
-          Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes),
+          Tables.documents(s, dir, spread = true),
           "text", "doc_id")
           .groupBy("simhash")
           .agg(count(lit(1)).as("n_docs")),
@@ -88,8 +88,7 @@ object TextQueries {
   private val q33 = Q(
     "q33_ngram_jaccard",
     (s, dir) => {
-      val d = Tables.parallelized(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      val d = Tables.documents(s, dir, spread = true).select(col("doc_id"), col("text"))
       val pairs = Dedup.minhashLsh(d, "text", "doc_id")
       Dedup.jaccardVerify(pairs, d, "text", "doc_id")
         .select("a_id", "b_id", "jaccard")
@@ -160,7 +159,7 @@ object TextQueries {
       val ntok = TextFns.tokenCount(col("text"))
       val nchar = length(col("text"))
       val padded = concat(lit(" "), col("text"), lit(" "))
-      Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      Tables.documents(s, dir, spread = true)
         .withColumn("awl", (nchar - (ntok - lit(1))).cast("double") / ntok)
         .withColumn("vr", TextFns.vowelCount(col("text")).cast("double") / nchar)
         .withColumn("sr", TextFns.occurrences(padded, " the ").cast("double") / ntok)
@@ -195,7 +194,7 @@ object TextQueries {
   private val q36 = Q(
     "q36_lang_id",
     (s, dir) =>
-      Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      Tables.documents(s, dir, spread = true)
         .withColumn("predicted", TextFns.langId(col("text")))
         .groupBy("lang", "predicted")
         .agg(count(lit(1)).as("n")),
@@ -226,7 +225,7 @@ object TextQueries {
   private val q37 = Q(
     "q37_fingerprint",
     (s, dir) =>
-      Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      Tables.documents(s, dir, spread = true)
         .withColumn("fp", TextFns.fingerprint(col("text")))
         .groupBy("source")
         .agg(countDistinct(col("fp")).as("n_distinct"), count(lit(1)).as("n_docs")),
@@ -246,7 +245,7 @@ object TextQueries {
     "q45_repetition",
     (s, dir) => {
       val sh = TextFns.shingles(col("text"), 3)
-      Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      Tables.documents(s, dir, spread = true)
         .filter(size(TextFns.words(col("text"))) >= 3)
         .withColumn("ratio",
           lit(1.0) - size(array_distinct(sh)).cast("double") / size(sh).cast("double"))
@@ -286,7 +285,7 @@ object TextQueries {
   private val q47 = Q(
     "q47_dedup_clusters",
     (s, dir) => {
-      val docs = Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true)
       val pairs = Dedup.minhashLsh(docs, "text", "doc_id")
       Dedup.survivors(docs, pairs, "doc_id")
     },
@@ -353,7 +352,7 @@ object TextQueries {
   private val q49 = Q(
     "q49_token_shards",
     (s, dir) => {
-      val d = Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      val d = Tables.documents(s, dir, spread = true)
       graft.operators.Corpus.packShards(d, "source", "doc_id",
           TextFns.tokenCount(col("text")), budget = 512L)
         .groupBy("source", "shard")
@@ -403,7 +402,7 @@ object TextQueries {
   private val q51 = Q(
     "q51_decontaminate",
     (s, dir) => {
-      val docs = Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true)
       val corpus = docs.filter(col("doc_id") % 10 =!= 0)
       val benchmark = docs.filter(col("doc_id") % 10 === 0)
       graft.operators.Corpus.decontaminate(corpus, benchmark, "text", "doc_id", n = 8)
@@ -447,7 +446,7 @@ object TextQueries {
           .flatMap { case (qid, ts) => ts.map(qid -> _) }
           .toDF("query_id", "term")
         graft.operators.TextSearch.bm25(
-          Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes),
+          Tables.documents(s, dir, spread = true),
           "text", "doc_id", queries, "query_id", "term", k = 5)
       },
       Some {
@@ -501,7 +500,7 @@ object TextQueries {
     "q53_phrase_search",
     (s, dir) =>
       graft.operators.TextSearch.phrase(
-        Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes),
+        Tables.documents(s, dir, spread = true),
         "text", "doc_id", "spark join", k = 10),
     Some("""
       WITH e AS (
@@ -524,7 +523,7 @@ object TextQueries {
   private val q54 = Q(
     "q54_bpe_tokens",
     (s, dir) =>
-      Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      Tables.documents(s, dir, spread = true)
         .withColumn("nb", TextFns.bpeTokenCount(col("text")))
         .withColumn("nw", TextFns.tokenCount(col("text")).cast("long"))
         .groupBy("lang")
@@ -617,7 +616,7 @@ object TextQueries {
   private val q59 = Q(
     "q59_decontaminate_fuzzy",
     (s, dir) => {
-      val docs = Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true)
       val corpus = docs.filter(col("doc_id") % 10 =!= 0)
       val benchmark = docs.filter(col("doc_id") % 10 === 0)
       graft.operators.Corpus
@@ -663,7 +662,7 @@ object TextQueries {
   private val q66 = Q(
     "q66_dup_spans",
     (s, dir) => graft.operators.SubstringDedup.spanStats(
-      Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes),
+      Tables.documents(s, dir, spread = true),
       "text", "doc_id", k = 8, hashKeys = false),
     Some {
       val gram8 = (0 until 8).map(j => s"ws[i+$j]").mkString(" || ' ' || ")
@@ -716,7 +715,7 @@ object TextQueries {
   private val q69 = Q(
     "q69_decontaminate_bloom",
     (s, dir) => {
-      val docs = Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true)
       val corpus = docs.filter(col("doc_id") % 10 =!= 0)
       val benchmark = docs.filter(col("doc_id") % 10 === 0)
       graft.operators.Corpus.decontaminateBloom(corpus, benchmark, "text", "doc_id", n = 8)
@@ -763,13 +762,13 @@ object TextQueries {
       "q70_hybrid_rrf",
       (s, dir) => {
         import s.implicits._
-        val docs = Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+        val docs = Tables.documents(s, dir, spread = true)
         val queries = queryTerms
           .flatMap { case (qid, ts) => ts.map(qid -> _) }
           .toDF("query_id", "term")
         val kw = graft.operators.TextSearch.bm25(
           docs, "text", "doc_id", queries, "query_id", "term", k = 10)
-        val e = Tables.parallelized(Tables.embeddings(s, dir), "vec_id", minBytes = Tables.TextHeavyMinBytes)
+        val e = Tables.embeddings(s, dir, spread = true)
         val vecIds = vecOf.map(_._2.toLong)
         val vec = graft.operators.KnnJoin.bruteForce(
             e.filter(col("vec_id").isin(vecIds: _*)), e.filter(col("vec_id") >= 5),
@@ -911,8 +910,7 @@ object TextQueries {
   private val q73 = Q(
     "q73_edit_verify",
     (s, dir) => {
-      val d = Tables.parallelized(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      val d = Tables.documents(s, dir, spread = true).select(col("doc_id"), col("text"))
       val pairs = Dedup.minhashLsh(d, "text", "doc_id")
       Dedup.editVerify(pairs, d, "text", "doc_id", maxDist = 64)
         .select("a_id", "b_id", "edit_dist", "edit_sim")
@@ -967,7 +965,7 @@ object TextQueries {
     "q77_chunk_docs",
     (s, dir) =>
       graft.operators.Corpus.chunkDocuments(
-        Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes),
+        Tables.documents(s, dir, spread = true),
         "text", "doc_id", chunkTokens = 32, overlapTokens = 8),
     Some("""
       WITH w AS (
@@ -993,7 +991,7 @@ object TextQueries {
   private val q78 = Q(
     "q78_snapshot_diff",
     (s, dir) => {
-      val docs = Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true)
       val a = docs.filter(col("doc_id") < 250)
       val b = docs.filter(col("doc_id") % 7 =!= 0)
         .withColumn("text",
@@ -1032,8 +1030,7 @@ object TextQueries {
     "q80_similarity_join",
     (s, dir) =>
       Dedup.similarityJoin(
-        Tables.parallelized(
-          Tables.documents(s, dir).select("doc_id", "text"), "doc_id")
+        Tables.documents(s, dir, spread = true).select("doc_id", "text")
           .filter(col("doc_id") < 500),
         "text", "doc_id", tau = 0.7),
     Some("""
@@ -1062,7 +1059,8 @@ object TextQueries {
     * min-pos aggregate → order-preserving reassembly the newline form
     * takes, fully oracle-mirrorable (string_agg ORDER BY pos).
     *
-    * minBytes = 0 (not TextHeavyMinBytes): q90 is SINGLE-pass and its
+    * Calls the spread rule itself, with a zero floor (not the
+    * documents loader's 2 MB): q90 is SINGLE-pass and its
     * per-row split/explode dominates, so the spread pays even at
     * sf0.1's sub-MB documents file — the round-7 floor change cost it
     * 0.68 → 0.90 s (same-session best-of-3 A/B, round 8); the 2 MB
@@ -1101,7 +1099,7 @@ object TextQueries {
     (s, dir) => {
       // single-file local scans serialize the tokenize/explode stage;
       // spread it (no-op on a pre-split cluster scan)
-      val docs = Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true)
       val m = graft.operators.LangModel.train(docs, "text")
       graft.operators.LangModel.score(docs, "text", "doc_id", m)
     },
@@ -1146,9 +1144,7 @@ object TextQueries {
   private val q92 = Q(
     "q92_dedup_corpus",
     (s, dir) => {
-      val docs = Tables.parallelized(
-        Tables.documents(s, dir).select("doc_id", "lang", "source", "text"), "doc_id",
-        minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true).select("doc_id", "lang", "source", "text")
       val unique = docs.join(
         Dedup.exact(docs, "text", "doc_id").select(col("keep_id")),
         docs("doc_id") === col("keep_id"), "leftsemi")
@@ -1228,7 +1224,7 @@ object TextQueries {
     "q93_boilerplate",
     (s, dir) =>
       graft.operators.TextClean.dropBoilerplateLines(
-        Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes),
+        Tables.documents(s, dir, spread = true),
         "text", "doc_id", maxDocs = 400, sep = " "),
     Some("""
       WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -1262,7 +1258,7 @@ object TextQueries {
     "q94_pmi_bigrams",
     (s, dir) =>
       graft.operators.LangModel.pmiTop(
-        Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes), "text",
+        Tables.documents(s, dir, spread = true), "text",
         k = 50, minCount = 5L),
     Some("""
       WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -1299,8 +1295,7 @@ object TextQueries {
     "q97_gopher_rules",
     (s, dir) =>
       graft.operators.QualityRules.gopher(
-        Tables.parallelized(Tables.documents(s, dir).select("doc_id", "text"), "doc_id",
-          minBytes = Tables.TextHeavyMinBytes), "text",
+        Tables.documents(s, dir, spread = true).select("doc_id", "text"), "text",
         graft.operators.QualityRules.Params(
           minWords = 20L, maxWords = 90L,
           minMeanWordLen = 3.0, maxMeanWordLen = 4.75,
@@ -1345,7 +1340,7 @@ object TextQueries {
   private val q99 = Q(
     "q99_pack_sequences",
     (s, dir) => {
-      val d = Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      val d = Tables.documents(s, dir, spread = true)
       graft.operators.Corpus.packSequences(
           d, "source", "doc_id", TextFns.tokenCount(col("text")), seqLen = 256L)
         .select("source", "doc_id", "seq_id", "tok_start", "tok_end", "n_tokens")
@@ -1444,7 +1439,7 @@ object TextQueries {
   private val q102 = Q(
     "q102_pack_rows",
     (s, dir) => {
-      val d = Tables.parallelized(Tables.documents(s, dir), "doc_id", minBytes = Tables.TextHeavyMinBytes)
+      val d = Tables.documents(s, dir, spread = true)
       graft.operators.Corpus.packedRows(d, "source", "doc_id", "text", seqLen = 256L)
         .select("source", "seq_id", "seq_text", "n_tokens")
     },
@@ -1487,9 +1482,7 @@ object TextQueries {
   private lazy val q111 = Q(
     "q111_normalize",
     (s, dir) => {
-      val d = Tables.parallelized(
-        Tables.documents(s, dir).select("doc_id", "text"), "doc_id",
-        minBytes = Tables.TextHeavyMinBytes)
+      val d = Tables.documents(s, dir, spread = true).select("doc_id", "text")
       val aug = concat(
         lit("  Cafe\u0301\t"), upper(substring(col("text"), 1, 40)),
         lit("\u00A0"), col("text"), lit(" \u0007x  "))
@@ -1525,9 +1518,7 @@ object TextQueries {
   private lazy val q112 = Q(
     "q112_redact_pii",
     (s, dir) => {
-      val d = Tables.parallelized(
-        Tables.documents(s, dir).select("doc_id", "text", "source"), "doc_id",
-        minBytes = Tables.TextHeavyMinBytes)
+      val d = Tables.documents(s, dir, spread = true).select("doc_id", "text", "source")
       val aug = concat(
         lit("reach "), col("source"), lit("@example.com ip 10.1."),
         (col("doc_id") % 256).cast("string"),
@@ -1588,9 +1579,7 @@ object TextQueries {
   private lazy val q113 = Q(
     "q113_dedup_incremental",
     (s, dir) => {
-      val docs = Tables.parallelized(
-        Tables.documents(s, dir).select("doc_id", "lang", "source", "text"), "doc_id",
-        minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true).select("doc_id", "lang", "source", "text")
       val existing = docs.filter(col("doc_id") % 2 === 0)
       val batch = docs.filter(col("doc_id") % 2 === 1)
       Dedup.dedupIncremental(batch, existing, "text", "doc_id",
@@ -1689,9 +1678,7 @@ object TextQueries {
   private lazy val q118 = Q(
     "q118_dsir_scores",
     (s, dir) => {
-      val docs = Tables.parallelized(
-        Tables.documents(s, dir).select("doc_id", "lang", "text"), "doc_id",
-        minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true).select("doc_id", "lang", "text")
       graft.operators.Dsir.scores(
         docs, docs.filter(col("lang") === "en"), "text", "doc_id", buckets = 1024)
     },
@@ -1746,9 +1733,7 @@ object TextQueries {
   private lazy val q125 = Q(
     "q125_dedup_hamming",
     (s, dir) => {
-      val docs = Tables.parallelized(
-        Tables.documents(s, dir).select("doc_id", "source", "text"), "doc_id",
-        minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true).select("doc_id", "source", "text")
       val fp = docs
         .withColumn("h64",
           expr("shiftleft(cast(conv(substring(md5(text), 1, 8), 16, 10) as bigint), 32)")
@@ -1813,9 +1798,7 @@ object TextQueries {
     "q129_bpe_merges",
     (s, dir) => {
       import graft.operators.Bpe
-      val docs = Tables
-        .parallelized(Tables.documents(s, dir), "doc_id",
-          minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true)
         .select(regexp_replace(lower(col("text")), "[^a-z]+", " ").as("t"))
       val model = Bpe.train(docs, "t", numMerges = 5, minFreq = 2L,
         // the oracle replays EXACT full-vocab BPE: pin the exact route
@@ -1934,9 +1917,7 @@ object TextQueries {
     "q130_bpe_encode",
     (s, dir) => {
       import graft.operators.Bpe
-      val docs = Tables
-        .parallelized(Tables.documents(s, dir), "doc_id",
-          minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true)
         .select(col("doc_id"),
           regexp_replace(lower(col("text")), "[^a-z]+", " ").as("t"))
       val model = Bpe.train(docs, "t", numMerges = 5, minFreq = 2L,
@@ -2065,9 +2046,7 @@ object TextQueries {
     "q135_kl_drift",
     (s, dir) => {
       import graft.operators.Profile
-      val docs = Tables
-        .parallelized(Tables.documents(s, dir), "doc_id",
-          minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true)
         .select(col("doc_id"), coalesce(col("lang"), lit("")).as("lang"),
           regexp_replace(lower(coalesce(col("text"), lit(""))), "[^a-z]+", " ").as("t"))
       val words = docs
@@ -2123,8 +2102,7 @@ object TextQueries {
     "q136_proximity_search",
     (s, dir) => {
       import graft.operators.TextSearch
-      val docs = Tables.parallelized(Tables.documents(s, dir), "doc_id",
-        minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true)
       TextSearch.proximity(docs, "text", "doc_id",
         Seq("hash", "join"), window = 5, k = 10)
     },
@@ -2163,9 +2141,7 @@ object TextQueries {
     "q138_corpus_pipeline",
     (s, dir) => {
       import graft.operators.QualityRules
-      val docs = Tables
-        .parallelized(Tables.documents(s, dir), "doc_id",
-          minBytes = Tables.TextHeavyMinBytes)
+      val docs = Tables.documents(s, dir, spread = true)
         .select(col("doc_id"), coalesce(col("lang"), lit("")).as("lang"), col("text"))
       val clean = QualityRules.gopher(docs, "text",
           QualityRules.Params(minWords = 20L, maxWords = 90L,

@@ -14,15 +14,12 @@ import graft.sources.Tables
   * (VectorFns.dotExact): decimal addition is exact and therefore
   * order-independent, so Spark's sequential array fold equals DuckDB's
   * grouped sum over the same per-element double products.
+  *
+  * Every query loads `embeddings` with `spread = true`: each does per-row
+  * array math (64-component dots/norms/explodes) that would otherwise run
+  * fused into a single-split local file scan.
   */
 object VectorQueries {
-
-  /** Embeddings with the scan spread across cores: every query here does
-    * per-row array math (64-component dots/norms/explodes) that would
-    * otherwise run fused into a single-split local file scan
-    * (Tables.parallelized is a no-op on a pre-split cluster scan). */
-  private def emb(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.parallelized(Tables.embeddings(s, dir), "vec_id", minBytes = Tables.TextHeavyMinBytes)
 
   private val dotSql =
     "CAST(SUM(CAST(CAST(%s[i] AS DOUBLE) * CAST(%s[i] AS DOUBLE) AS DECIMAL(38,18))) AS DOUBLE)"
@@ -77,7 +74,7 @@ object VectorQueries {
   private val q38 = Q(
     "q38_cosine_topk",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
       KnnJoin.bruteForce(
         e.filter(col("vec_id") < 5), e.filter(col("vec_id") >= 5),
         "embedding", "vec_id", k = 3)
@@ -103,7 +100,7 @@ object VectorQueries {
   private val q39 = Q(
     "q39_ann_buckets",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
       KnnJoin.bucketed(
         e.filter(col("vec_id") < 20), e.filter(col("vec_id") >= 20),
         "embedding", "vec_id", k = 1, bits = 4)
@@ -138,7 +135,7 @@ object VectorQueries {
   private val q40 = Q(
     "q40_embedding_stats",
     (s, dir) =>
-      emb(s, dir)
+      Tables.embeddings(s, dir, spread = true)
         .withColumn("nrm", VectorFns.normExact(col("embedding")))
         .withColumn("c1", element_at(col("embedding"), 1).cast("double"))
         .groupBy("label")
@@ -164,7 +161,7 @@ object VectorQueries {
   private val q43 = Q(
     "q43_centroids",
     (s, dir) =>
-      emb(s, dir)
+      Tables.embeddings(s, dir, spread = true)
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "comp")))
         .groupBy("label", "pos")
         .agg(davg(col("comp").cast("double")).as("c")),
@@ -183,7 +180,7 @@ object VectorQueries {
   private val q44 = Q(
     "q44_ivf_assign",
     (s, dir) => {
-      val centroids = emb(s, dir)
+      val centroids = Tables.embeddings(s, dir, spread = true)
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "comp")))
         .groupBy("label", "pos")
         .agg(davg(col("comp").cast("double")).as("c"))
@@ -192,7 +189,7 @@ object VectorQueries {
           s => s.getField("c")).as("centroid"))
         .select(col("label").as("assigned"), col("centroid"),
           VectorFns.normExact(col("centroid")).as("nrm_c"))
-      val e = emb(s, dir).select("vec_id", "embedding")
+      val e = Tables.embeddings(s, dir, spread = true).select("vec_id", "embedding")
         .withColumn("nrm_e", sqrt(VectorFns.dot(col("embedding"), col("embedding"))))
       // Nearest-centroid pick as a TRUE hash aggregate: the native
       // ArgMaxPack expression packs (cosine, assigned) into one
@@ -263,7 +260,7 @@ object VectorQueries {
     "q46_ivf_search",
     (s, dir) => {
       graft.plans.RankFilterToTopK_Install(s)
-      val centroids = emb(s, dir)
+      val centroids = Tables.embeddings(s, dir, spread = true)
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "comp")))
         .groupBy("label", "pos")
         .agg(davg(col("comp").cast("double")).as("c"))
@@ -272,7 +269,7 @@ object VectorQueries {
           f => f.getField("c")).as("centroid"))
         .select(col("label").as("cl"), col("centroid"),
           sqrt(VectorFns.dot(col("centroid"), col("centroid"))).as("nrm_c"))
-      val e = emb(s, dir).select("vec_id", "embedding")
+      val e = Tables.embeddings(s, dir, spread = true).select("vec_id", "embedding")
         .withColumn("nrm_e", sqrt(VectorFns.dot(col("embedding"), col("embedding"))))
       val vc = e.crossJoin(broadcast(centroids))
         .withColumn("ccos",
@@ -375,7 +372,7 @@ object VectorQueries {
   private val q89 = Q(
     "q89_semantic_dedup",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
       val (centroids, _) = graft.operators.Dedup.blockCentroids(
         e, "embedding", "vec_id", "label", targetClusterSize = 25)
       val pairs = graft.operators.Dedup.semanticPairs(
@@ -493,7 +490,7 @@ object VectorQueries {
   private val q89b = Q(
     "q89b_semantic_dedup_auto",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
       val n = e.count()
       // k = ceil(n/S): linear-in-n codebook (the scale contract), S=50.
       // Two Lloyd rounds: a blocking codebook doesn't need convergence —
@@ -584,7 +581,8 @@ object VectorQueries {
   private val q109 = Q(
     "q109_sq8_roundtrip",
     (s, dir) => {
-      val enc = graft.operators.Quantize.sq8Encode(emb(s, dir), "embedding")
+      val enc = graft.operators.Quantize.sq8Encode(
+        Tables.embeddings(s, dir, spread = true), "embedding")
       enc.select(col("vec_id"), col("sq8_offset"), col("sq8_scale"),
           explode(zip_with(col("sq8_codes"), col("embedding").cast("array<double>"),
             (c, x) => struct(c.as("c"), x.as("x")))).as("z"))
@@ -638,7 +636,7 @@ object VectorQueries {
   private val q116 = Q(
     "q116_dedup_embeddings",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
       graft.operators.Dedup.dedupCorpusByEmbedding(e, "embedding", "vec_id",
           threshold = 0.4, bits = 8, tables = 1)
         .select("vec_id", "label")
@@ -749,7 +747,7 @@ object VectorQueries {
   private val q119 = Q(
     "q119_pq_adc",
     (s, dir) => {
-      val base = emb(s, dir)
+      val base = Tables.embeddings(s, dir, spread = true)
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
       val m = 8
       val dim = 64
@@ -878,7 +876,7 @@ object VectorQueries {
   private val q120 = Q(
     "q120_two_level_assign",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
       val (centroids, labelBits) = graft.operators.Dedup.blockCentroids(
         e, "embedding", "vec_id", "label", targetClusterSize = 25)
       // the two-level path evaluates the codebook several times (count,
@@ -1003,7 +1001,7 @@ object VectorQueries {
   private val q122 = Q(
     "q122_dedup_multitable",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
       graft.operators.Dedup.dedupCorpusByEmbedding(e, "embedding", "vec_id",
           threshold = 0.4, bits = 8, tables = 2)
         .select("vec_id", "label")
@@ -1092,7 +1090,7 @@ object VectorQueries {
   private val q123 = Q(
     "q123_ivfpq_search",
     (s, dir) => {
-      val base = emb(s, dir)
+      val base = Tables.embeddings(s, dir, spread = true)
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
       // trainCodebook's driver loop returns LocalRelation codebooks —
       // already materialized, nothing to pin (the former localCheckpoint
@@ -1214,7 +1212,7 @@ object VectorQueries {
   private val q126 = Q(
     "q126_ivfpq_refined",
     (s, dir) => {
-      val base = emb(s, dir)
+      val base = Tables.embeddings(s, dir, spread = true)
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
       // LocalRelation codebooks — no lineage to pin (see q123)
       val model = graft.operators.IvfPq.train(base, "vec_id", "embedding",
@@ -1261,7 +1259,7 @@ object VectorQueries {
   private val q124 = Q(
     "q124_dedup_incr_embed",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
       val existing = e.filter(col("vec_id") % 2 === 0)
       val batch = e.filter(col("vec_id") % 2 === 1)
       graft.operators.Dedup.dedupIncrementalByEmbedding(batch, existing,
@@ -1306,7 +1304,7 @@ object VectorQueries {
     "q132_ann_recall",
     (s, dir) => {
       import graft.operators.AnnEval
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
       val q = e.filter(col("vec_id") < 5)
       val t = e.filter(col("vec_id") >= 5)
       val exact = KnnJoin.bruteForce(q, t, "embedding", "vec_id", k = 3)
@@ -1374,7 +1372,7 @@ object VectorQueries {
     "q134_pca_eigen",
     (s, dir) => {
       import graft.operators.Pca
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
         .select(slice(col("embedding").cast("array<double>"), 1, 2).as("v2"))
       val model = Pca.fit(e, "v2", d = 2, k = 2)
       import s.implicits._
@@ -1429,7 +1427,7 @@ object VectorQueries {
     "q139_pca_components",
     (s, dir) => {
       import graft.operators.Pca
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
         .select(slice(col("embedding").cast("array<double>"), 1, 2).as("v2"))
       val model = Pca.fit(e, "v2", d = 2, k = 2)
       import s.implicits._
@@ -1493,7 +1491,7 @@ object VectorQueries {
   private val q140 = Q(
     "q140_kmeans_seed_round",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
       graft.operators.KMeans.seedRound1(e, "vec_id", "embedding", k = 8)
         .select(col("id").as("vec_id"), col("round"), col("u"), col("d2"))
@@ -1535,7 +1533,7 @@ object VectorQueries {
   private val q142 = Q(
     "q142_kmeans_chosen_seeds",
     (s, dir) => {
-      val e = emb(s, dir)
+      val e = Tables.embeddings(s, dir, spread = true)
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
       graft.operators.KMeans.chosenSeeds(e, "vec_id", "embedding", k = 3, rounds = 1)
     },

@@ -9,6 +9,32 @@ import org.apache.spark.sql.functions.expr
   * parquet scan (callers `.select` only what they need; Spark prunes the
   * rest). At 100 TB these tables would be partitioned/bucketed — loaders
   * keep that decision in one place.
+  *
+  * **Spread policy.** `documents`, `embeddings`, `events` and `lineitem`
+  * take `spread = true` for per-row-heavy work (regex tokenize, shingle
+  * explode, a Newton solve per row, decimal partial sums). The loader
+  * then hash-repartitions the frame it returns on the table's id column
+  * (`doc_id`, `vec_id`, `event_id`, `l_orderkey`) when the scan arrived
+  * with too few splits to feed the cores AND the table's estimated bytes
+  * exceed its floor:
+  *  - 2 MB ([[TextHeavyMinBytes]]) for `documents` and `embeddings`:
+  *    compressed text understates its regex/explode work (sf1's 50k-doc
+  *    table is 5.8 MB on disk but seconds of tokenizing per core; the
+  *    spread measured 4-7x there), while sf0.1's sub-MB inputs stay
+  *    unspread, where a round-7 on/off A/B measured the exchange as a
+  *    net loss on multi-pass pipelines (q92 +0.84 s, q89b +0.27 s). The
+  *    floor was 4 MB until it missed a column-pruned projection's
+  *    ~2.6 MB estimate at sf1 and q97's sf0.1 -> sf1 slope went 1.4x ->
+  *    13x; the loader judges the whole table, so a later `.select`
+  *    cannot lose the spread.
+  *  - 8 MB for `events` and `lineitem`: under it the exchange costs more
+  *    than the serial scan it parallelizes (wrapping the 6 MB sf0.1
+  *    embeddings regressed the multi-pass dedup pipelines, while 60 MB+
+  *    inputs won 3-7x).
+  * `SPARK_GRAFT_SPREAD=off` turns every spread off. On a cluster the
+  * scan arrives pre-split and the spread is a no-op. Operators never
+  * repartition their input themselves: a caller that wants its work
+  * spread passes a spread frame.
   */
 object Tables {
   private def load(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -20,7 +46,8 @@ object Tables {
   def supplier(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "supplier")
   def part(spark: SparkSession, dir: String): DataFrame      = load(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "orders")
-  def lineitem(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "lineitem")
+  def lineitem(spark: SparkSession, dir: String, spread: Boolean = false): DataFrame =
+    spreadIf(spread, load(spark, dir, "lineitem"), "l_orderkey", PlainMinBytes)
   /** `ts` arrives in whatever physical parquet type the driver generated
     * that round — TIMESTAMP(NANOS) in rounds 1-5 (no native Spark type;
     * the loader forces spark.sql.legacy.parquet.nanosAsLong and converts
@@ -66,30 +93,29 @@ object Tables {
     catch { case _: Throwable => false }
   private[graft] def ntzCastSql(spark: SparkSession): String =
     if (sessionIsUtc(spark)) "cast(ts as timestamp)" else ntzToUtcTimestamp
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def events(spark: SparkSession, dir: String, spread: Boolean = false): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(spark, dir, "events")
-    raw.schema("ts").dataType match {
+    val normalized = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case org.apache.spark.sql.types.TimestampNTZType =>
         raw.withColumn("ts", expr(ntzCastSql(spark)))
       case _ => raw
     }
+    spreadIf(spread, normalized, "event_id", PlainMinBytes)
   }
-  def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
-  def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
+  def documents(spark: SparkSession, dir: String, spread: Boolean = false): DataFrame =
+    spreadIf(spread, load(spark, dir, "documents"), "doc_id", TextHeavyMinBytes)
+  def embeddings(spark: SparkSession, dir: String, spread: Boolean = false): DataFrame =
+    spreadIf(spread, load(spark, dir, "embeddings"), "vec_id", TextHeavyMinBytes)
 
-  /** Spread floor for regex/explode-heavy text and vector scans, where
-    * compressed bytes understate per-row work: well under the plain 8 MB
-    * default, sized so sf1-scale text inputs spread (raw scan ~6 MB, and
-    * a column-pruned projection's ESTIMATE drops to ~2.6 MB — the floor
-    * must sit below the pruned estimate or projected call sites lose
-    * their spread exactly where it pays; measured q97 1.4x -> 13x when a
-    * 4 MB floor missed the pruned estimate) while sf0.1's sub-MB
-    * estimates — where the exchange measured as a net loss — stay
-    * unspread. */
-  val TextHeavyMinBytes: Long = 2L << 20
+  /** Spread floors (see the object doc for the measurements behind them). */
+  private[graft] val TextHeavyMinBytes: Long = 2L << 20
+  private[graft] val PlainMinBytes: Long = 8L << 20
+
+  private def spreadIf(spread: Boolean, df: DataFrame, keyCol: String, minBytes: Long): DataFrame =
+    if (spread) parallelized(df, keyCol, minBytes) else df
 
   /** Spread per-row-heavy work across cores when the scan arrived with too
     * few splits to feed them (a small local parquet file is ONE split,
@@ -101,8 +127,7 @@ object Tables {
     * maxPartitionBytes: a file COUNT would misjudge one large splittable
     * file as serial (forcing a full at-scale shuffle), and probing df.rdd
     * would pay physical planning + RDD DAG construction per query build. */
-  def parallelized(df: DataFrame, keyCol: String,
-                   minBytes: Long = 8L << 20): DataFrame = {
+  private[graft] def parallelized(df: DataFrame, keyCol: String, minBytes: Long): DataFrame = {
     // runtime kill switch (A/B experiments, emergency off on a deploy
     // where the exchange measures as a net loss): off = never spread
     if (sys.env.get("SPARK_GRAFT_SPREAD").contains("off")) return df
@@ -110,19 +135,7 @@ object Tables {
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val estSplits = (bytes / BigInt(math.max(1L, conf.filesMaxPartitionBytes))) + 1
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    // Size floor: under ~8 MB the repartition exchange usually costs
-    // more than the serial scan it parallelizes (measured: wrapping the
-    // 6 MB sf0.1 embeddings table regressed the multi-pass dedup
-    // pipelines that re-read it, while the same wrap on 60 MB+ inputs
-    // won 3-7x). BYTES ARE A PROXY FOR WORK, and a bad one for heavily
-    // compressed text whose per-row cost is regex/explode-bound — such
-    // call sites pass TextHeavyMinBytes (2 MB): still spreading well
-    // below the plain-scan floor (measured 4-7x on the tokenize-heavy
-    // text queries at sf1, ~6 MB on disk) but NOT at sf0.1's sub-MB
-    // inputs, where a round-7 on/off A/B (best-of-2 full-catalog runs,
-    // SCALING.md) measured the exchange as a stable net LOSS on
-    // multi-pass pipelines (q92 +0.84 s, q89b +0.27 s) against only
-    // ~0.2 s of single-pass wins.
+    // bytes are a proxy for work: see the object doc for each floor
     val worthSpreading = bytes > BigInt(minBytes)
     if (worthSpreading && estSplits * 2 < cores)
       df.repartition(org.apache.spark.sql.functions.col(keyCol)) else df

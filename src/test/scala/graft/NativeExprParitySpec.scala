@@ -23,14 +23,31 @@ class NativeExprParitySpec extends SparkSpec {
 
   private val docs = (1 to 200).map(i => (i.toLong, randDoc())).toDF("doc_id", "text")
 
-  test("WordShingles == slice/zip_with composition on random docs (incl. empties, unicode)") {
-    val ws = split(col("text"), " ")
-    val len = greatest(size(ws) - lit(2), lit(0))
-    val composed = (0 until 3).map(o => slice(ws, lit(o + 1), len))
+  /** The builtin composition WordShingles replaced: split, `n` slices and
+    * a zip_with concat chain. */
+  private def builtinShingles(text: Column, n: Int): Column = {
+    val ws = split(text, " ")
+    val len = greatest(size(ws) - lit(n - 1), lit(0))
+    (0 until n).map(o => slice(ws, lit(o + 1), len))
       .reduce((acc, p) => zip_with(acc, p, (a, b) => concat(a, lit(" "), b)))
+  }
+
+  /** The explode + vote aggregation SimHashBits replaced, over `(id, w)`
+    * word rows: each id's `bits`-bit fingerprint `fp`. */
+  private def builtinSimhash(words: DataFrame, bits: Int): DataFrame = {
+    val votes = (0 until bits).map { j =>
+      val c = substring(md5(col("w")), j + 1, 1)
+      val hexVal = when(ascii(c) >= 97, ascii(c) - 87).otherwise(ascii(c) - 48)
+      sum(when(hexVal % 2 === 1, 1L).otherwise(-1L)).as(s"v$j")
+    }
+    val fp = (0 until bits).map(j => when(col(s"v$j") > 0, lit(1L << j)).otherwise(0L)).reduce(_ + _)
+    words.groupBy("id").agg(votes.head, votes.tail: _*).select(col("id"), fp.as("fp"))
+  }
+
+  test("WordShingles == slice/zip_with composition on random docs (incl. empties, unicode)") {
     val rows = docs.select(
       WordShingles.of(col("text"), 3).as("native"),
-      composed.as("composed"),
+      builtinShingles(col("text"), 3).as("composed"),
     ).as[(Seq[String], Seq[String])].collect()
     rows.foreach { case (n, c) => assert(n == c) }
   }
@@ -39,17 +56,9 @@ class NativeExprParitySpec extends SparkSpec {
     val native = docs.select(col("doc_id"),
       SimHashBits.of(array_distinct(TextFns.words(col("text"))), 16).as("fp"))
       .as[(Long, Long)].collect().toMap
-    val wordsDf = docs.select(col("doc_id").as("doc"),
+    val wordsDf = docs.select(col("doc_id").as("id"),
       explode(array_distinct(TextFns.words(col("text")))).as("w"))
-      .withColumn("h", md5(col("w")))
-    val votes = (0 until 16).map { j =>
-      val c = substring(col("h"), j + 1, 1)
-      val hexVal = when(ascii(c) >= 97, ascii(c) - 87).otherwise(ascii(c) - 48)
-      sum(when(hexVal % 2 === 1, 1L).otherwise(-1L)).as(s"v$j")
-    }
-    val fp = (0 until 16).map(j => when(col(s"v$j") > 0, lit(1L << j)).otherwise(0L)).reduce(_ + _)
-    val composed = wordsDf.groupBy("doc").agg(votes.head, votes.tail: _*)
-      .select(col("doc"), fp.as("fp")).as[(Long, Long)].collect().toMap
+    val composed = builtinSimhash(wordsDf, 16).as[(Long, Long)].collect().toMap
     // the explode path drops docs with zero words; compare on its domain
     composed.foreach { case (d, f) => assert(native(d) == f, s"doc $d") }
     assert(composed.nonEmpty)
@@ -325,36 +334,41 @@ class NativeExprParitySpec extends SparkSpec {
     }
   }
 
+  /** Random docs for the text properties: null, empty, one-word, unicode
+    * and multi-space docs (a double space is an empty word). */
+  private def textDocs = {
+    import org.scalacheck.Gen
+    val word = Gen.oneOf(vocab)
+    Gen.frequency[String](
+      1 -> Gen.const(null), 1 -> Gen.const(""), 2 -> word,
+      6 -> Gen.choose(2, 14).flatMap(k => Gen.listOfN(k, word)).map(_.mkString(" ")))
+  }
+
+  private def textFrame(texts: Seq[String]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      texts.zipWithIndex.map { case (t, i) => Row(i, t) }, 2),
+      StructType(Seq(StructField("id", IntegerType), StructField("text", StringType))))
+
   test("MinHashBands (md5 and xxhash64 families) and MinHashSig codegen'd and interpreted both equal builtin explode/fold references (scalacheck)") {
     import org.scalacheck.{Gen, Prop, Test => Check}
     import org.scalacheck.rng.Seed
-    val schema = StructType(Seq(StructField("id", IntegerType), StructField("text", StringType)))
-    val word = Gen.oneOf(vocab)
-    // null, empty, one-word and unicode docs; shingle widths up to 9, past
-    // most docs' word counts
-    val doc = Gen.frequency[String](
-      1 -> Gen.const(null), 1 -> Gen.const(""), 2 -> word,
-      6 -> Gen.choose(2, 14).flatMap(k => Gen.listOfN(k, word)).map(_.mkString(" ")))
+    // shingle widths up to 9, past most docs' word counts
     val shape = Gen.zip(Gen.oneOf((8, 2), (4, 1), (6, 3)), Gen.choose(1, 9))
     val family = Gen.oneOf[MinHashFamily](MinHashFamily.Md5Hex, MinHashFamily.XxHash64)
-    val batches = Gen.zip(family, shape, Gen.listOfN(40, doc))
+    val batches = Gen.zip(family, shape, Gen.listOfN(40, textDocs))
     inBothCodegenModes { mode =>
       val seen = scala.collection.mutable.Set[MinHashFamily]()
       val prop = Prop.forAllNoShrink(batches) { case (fam, ((hashes, bands), n), texts) =>
         seen += fam
         val isMd5 = fam == MinHashFamily.Md5Hex
-        val df = spark.createDataFrame(spark.sparkContext.parallelize(
-          texts.zipWithIndex.map { case (t, i) => Row(i, t) }, 2), schema)
+        val df = textFrame(texts)
         def byId(out: DataFrame): Map[Int, Seq[Any]] =
           out.collect().collect { case r if !r.isNullAt(1) => r.getInt(0) -> r.getSeq[Any](1).toSeq }.toMap
         val native = byId(df.select(col("id"), MinHashBands.of(col("text"), hashes, bands, n, fam)))
         // builtin shingles (no native expression), explode, per-component
         // min — min(substring(md5(sh), 1+4i, 4)) or min(xxhash64(sh, i)) —
         // then per band md5(concat(…)) or the xxhash64 fold; no shingle → null
-        val ws = split(col("text"), " ")
-        val len = greatest(size(ws) - lit(n - 1), lit(0))
-        val shingles = (0 until n).map(o => slice(ws, lit(o + 1), len))
-          .reduce((acc, p) => zip_with(acc, p, (a, b) => concat(a, lit(" "), b)))
+        val shingles = builtinShingles(col("text"), n)
         val perBand = hashes / bands
         val mins = (0 until hashes).map { i =>
           (if (isMd5) min(substring(md5(col("sh")), 1 + 4 * i, 4))
@@ -375,6 +389,50 @@ class NativeExprParitySpec extends SparkSpec {
         .withInitialSeed(Seed(5L)).withWorkers(1), prop)
       assert(result.passed, s"$mode: $result")
       assert(seen == Set(MinHashFamily.Md5Hex, MinHashFamily.XxHash64), s"$mode: families $seen")
+    }
+  }
+
+  test("WordShingles codegen'd and interpreted both equal the slice/zip_with composition (scalacheck)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    // widths past most docs' word counts, so empty results show up too
+    val batches = Gen.zip(Gen.choose(1, 9), Gen.listOfN(40, textDocs))
+    inBothCodegenModes { mode =>
+      val prop = Prop.forAllNoShrink(batches) { case (n, texts) =>
+        val df = textFrame(texts)
+        def byId(shingles: Column): Map[Int, Option[Seq[String]]] =
+          df.select(col("id"), shingles).collect()
+            .map(r => r.getInt(0) -> Option(r.getSeq[String](1)).map(_.toSeq)).toMap
+        val native = byId(WordShingles.of(col("text"), n))
+        native == byId(builtinShingles(col("text"), n)) && native.size == texts.size
+      }
+      val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(12)
+        .withInitialSeed(Seed(6L)).withWorkers(1), prop)
+      assert(result.passed, s"$mode: $result")
+    }
+  }
+
+  test("SimHashBits codegen'd and interpreted both equal the explode + vote aggregation (scalacheck)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    // 16 is what Dedup.simhash runs; 32 reads every md5 hex digit
+    val batches = Gen.zip(Gen.oneOf(1, 7, 16, 32), Gen.listOfN(40, textDocs))
+    inBothCodegenModes { mode =>
+      val prop = Prop.forAllNoShrink(batches) { case (bits, texts) =>
+        val df = textFrame(texts)
+        val words = array_distinct(TextFns.words(col("text")))
+        val native = df.select(col("id"), SimHashBits.of(words, bits)).collect()
+          .map(r => r.getInt(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
+        // a null text has no word array, hence no exploded rows and no
+        // reference fingerprint: the native value must be null there
+        val reference = builtinSimhash(df.select(col("id"), explode(words).as("w")), bits)
+          .collect().map(r => r.getInt(0) -> Option(r.getLong(1))).toMap
+        val nullIds = texts.zipWithIndex.collect { case (null, i) => i }.toSet
+        native == (reference ++ nullIds.map(_ -> None)) && native.size == texts.size
+      }
+      val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(12)
+        .withInitialSeed(Seed(7L)).withWorkers(1), prop)
+      assert(result.passed, s"$mode: $result")
     }
   }
 }

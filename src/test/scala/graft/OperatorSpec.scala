@@ -119,12 +119,15 @@ class OperatorSpec extends SparkSpec {
 
   test("Corpus.sampleByHash is deterministic; rate 1 keeps all, rate 0 keeps none") {
     import graft.operators.Corpus
-    val df = (1 to 200).map(i => (i.toLong, s"document number $i")).toDF("doc_id", "text")
-    val once = Corpus.sampleByHash(df, "text", lit(0.25)).select("doc_id").as[Long].collect().toSet
-    val again = Corpus.sampleByHash(df, "text", lit(0.25)).select("doc_id").as[Long].collect().toSet
-    assert(once == again && once.nonEmpty && once.size < 200)
-    assert(Corpus.sampleByHash(df, "text", lit(1.0)).count() == 200)
-    assert(Corpus.sampleByHash(df, "text", lit(0.0)).count() == 0)
+    // docs 201-210 have a null text: no hash, so never kept at any rate
+    val df = ((1 to 200).map(i => (i.toLong, s"document number $i")) ++
+      (201 to 210).map(i => (i.toLong, null.asInstanceOf[String]))).toDF("doc_id", "text")
+    def kept(rate: Double): Set[Long] =
+      Corpus.sampleByHash(df, "text", lit(rate)).select("doc_id").as[Long].collect().toSet
+    val once = kept(0.25)
+    assert(once == kept(0.25) && once.nonEmpty && once.size < 200)
+    assert(kept(1.0) == (1L to 200L).toSet)
+    assert(kept(0.0).isEmpty)
   }
 
   test("Profile.numeric emits one row per column from a single scan") {
