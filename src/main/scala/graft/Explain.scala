@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
+
 /** Dumps formatted physical plans for representative catalog queries —
   * the plan-quality audit trail (pushdown, broadcast, shuffle count).
   * Usage: runMain graft.Explain [sfDir] [outFile]
@@ -22,20 +25,26 @@ object Explain {
     sb.append(s"\nSF dir: `$sfDir`. Things to look for: `PushedFilters` on scans,\n")
     sb.append("pruned `ReadSchema`, `BroadcastHashJoin` on dimension joins,\n")
     sb.append("`WholeStageCodegen` spans covering the hot path.\n")
-    sb.append("\nIterative queries (connected components, Lloyd training, BPE)\n")
-    sb.append("run their loop EAGERLY at build time with per-round\n")
-    sb.append("localCheckpoint barriers, so their printed plan is the tail\n")
-    sb.append("after the last checkpoint (`Scan ExistingRDD`) — the per-round\n")
-    sb.append("plan shape is pinned by PlanGuardSpec instead.\n")
+    sb.append("\nA query reads a `graft.Barrier` as `Scan ExistingRDD`. The producer plan\n")
+    sb.append("of every barrier built while planning the query follows its plan, in\n")
+    sb.append("creation order, under `### Below barrier RDD[N]`.\n")
     interesting.foreach { name =>
-      val df = queries.Queries.queryMap(name)(spark, sfDir)
-      sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      sb.append("```\n")
+      sb.append(s"\n## $name\n\n")
+      sb.append(withBelowBarriers(queries.Queries.queryMap(name)(spark, sfDir)))
     }
     Files.writeString(Paths.get(outFile), sb.toString)
     println(s"wrote $outFile")
     spark.stop()
+  }
+
+  /** The formatted plan of the frame `build` returns, then the producer
+    * plan of every barrier `build` created, in creation order: the ones
+    * the plan scans, and the ones whose rows were collected on the way
+    * (a size gate, a union-find over collected edges). */
+  private[graft] def withBelowBarriers(build: => DataFrame): String = {
+    val (df, producers) = Barrier.recordingPlans(build)
+    (s"```\n${df.queryExecution.explainString(FormattedMode)}```\n" +: producers.map {
+      case (id, plan) => s"\n### Below barrier RDD[$id]\n\n```\n$plan```\n"
+    }).mkString
   }
 }

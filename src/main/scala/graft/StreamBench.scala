@@ -110,7 +110,7 @@ object StreamBench {
 
     // IVF model trained ONCE on the real embeddings. At this codebook
     // size IvfPq.train runs the driver-resident Lloyd loop and returns
-    // LocalRelations — already materialized, so the eager localCheckpoint
+    // LocalRelations — already materialized, so the eager barrier
     // pinning this once carried would just be two wasted barrier jobs
     val model = graft.operators.IvfPq.train(embDf, "vec_id", "embedding",
       dim = dim, nlist = 16, m = 8, k = 16, iters = 2)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Byte-pair-encoding tokenizer TRAINING — the vocabulary is itself a
   * training-data-pipeline product (Sennrich et al.'s word-level BPE:
   * learn merges on the corpus' word-frequency table, then tokenize with
@@ -28,7 +30,7 @@ import org.apache.spark.sql.functions._
   *    agreement);
   *  - `capVocab = false` (or budget 0) instead falls back LOUDLY to the
   *    exact distributed loop (one pair-count job + argmax + rewrite per
-  *    round, state localCheckpoint'd so round k doesn't re-execute all
+  *    round, state behind a [[graft.Barrier]] so round k doesn't re-execute all
   *    prior rounds — the lineage trap documented on
   *    Dedup.resolveClusters) — correct but one Spark job per merge.
   *
@@ -145,12 +147,11 @@ object Bpe {
 
     // corpus → distinct-word frequency table; this is the ONLY
     // corpus-sized job
-    val wordFreq = df
+    val wordFreq = Barrier(df
       .select(explode(graft.functions.TextFns.words(col(textCol))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("n"))
-      .as[(String, Long)]
-      .localCheckpoint(false)
+      .as[(String, Long)])
 
     // Size guard: one tiny agg over the (already word-sized) table. The
     // driver-side state is per-SYMBOL boxed strings, so estimate ~48 B
@@ -354,14 +355,13 @@ object Bpe {
 
   /** Distributed per-round merge loop — the fallback for vocabularies
     * that exceed the driver budget. One pair-count job + global argmax +
-    * symbol rewrite per round; state localCheckpoint'd each round. */
+    * symbol rewrite per round; state behind a [[graft.Barrier]] each round. */
   private[operators] def trainDistributed(wordFreq: Dataset[(String, Long)],
                                           numMerges: Int, minFreq: Long): Model = {
     val spark = wordFreq.sparkSession
     import spark.implicits._
-    var vocab: Dataset[(Seq[String], Long)] = wordFreq
-      .map { case (w, n) => (symbols(w): Seq[String], n) }
-      .localCheckpoint(false)
+    var vocab: Dataset[(Seq[String], Long)] =
+      Barrier(wordFreq.map { case (w, n) => (symbols(w): Seq[String], n) })
 
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var continue = true
@@ -381,7 +381,7 @@ object Bpe {
         case Some((a, b, freq)) if freq >= minFreq =>
           merges += ((a, b))
           val merged = a + b
-          val next = vocab.map { case (syms, n) =>
+          val next = Barrier(vocab.map { case (syms, n) =>
             val out = scala.collection.mutable.ArrayBuffer.empty[String]
             var i = 0
             while (i < syms.length) {
@@ -390,9 +390,9 @@ object Bpe {
               } else { out += syms(i); i += 1 }
             }
             (out.toSeq, n)
-          }.localCheckpoint(false)
-          // note: no unpersist — it is a no-op for localCheckpoint
-          // blocks; dropping the reference lets ContextCleaner reclaim
+          })
+          // note: no unpersist — it is a no-op for barrier blocks;
+          // dropping the reference lets ContextCleaner reclaim
           // the previous round's RDD blocks
           vocab = next
         case _ => continue = false

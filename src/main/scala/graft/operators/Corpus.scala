@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Corpus-assembly operators — the sampling/sharding stage of a
   * training-data pipeline (after cleaning + dedup, before tokenization):
   * deterministic mixture sampling and token-budget shard packing.
@@ -115,9 +117,8 @@ object Corpus {
     * kept, whatever their source's rate (see [[sampleByHash]]). */
   def sampleToMixture(df: DataFrame, textCol: String, sourceCol: String,
                       tokensCol: Column, targets: Seq[(String, Double)]): DataFrame = {
-    val rates = mixtureRates(df, sourceCol, tokensCol, targets)
-      .select(col("source").as("__msrc"), col("rate").as("mixture_rate"))
-      .localCheckpoint(false)
+    val rates = Barrier(mixtureRates(df, sourceCol, tokensCol, targets)
+      .select(col("source").as("__msrc"), col("rate").as("mixture_rate")))
     val joined = df.join(broadcast(rates), col(sourceCol) === col("__msrc")).drop("__msrc")
     sampleByHash(joined, textCol, col("mixture_rate"))
   }
@@ -280,16 +281,16 @@ object Corpus {
     require(n >= 1, s"n must be >= 1, got $n")
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
 
-    // One eager localCheckpoint materializes the explode+distinct shuffle
-    // exactly once and truncates lineage: the sizing count, the bloom
+    // One lazy barrier, stored by the sizing count below (its first
+    // action), materializes the explode+distinct shuffle exactly once
+    // and truncates lineage: the sizing count, the bloom
     // build, and the returned plan's verify join all read the same
     // executor-resident blocks (never recomputed, never routed through
     // the driver), and the blocks are freed by the ContextCleaner when
     // the frame is unreachable — no session-lifetime cache residency.
-    val benchShingles = benchmark
+    val benchShingles = Barrier(benchmark
       .select(explode(TextFns.shingles(col(textCol), n)).as("__s"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
 
     // Size the filter to the actual distinct-shingle count (one tiny
     // aggregate over the structurally-small benchmark), then build it
@@ -311,12 +312,11 @@ object Corpus {
       .filter(exists(col("__sh"), s => mightContainCol(bloomBytes, s)))
 
     // exact verify on the (tiny) candidate set only — false positives die here
-    val hits = candidates
+    val hits = Barrier(candidates
       .select(col(idCol), explode(col("__sh")).as("__s"))
       .join(broadcast(verifyDim), Seq("__s"), "leftsemi")
       .select(idCol).distinct()
-      .withColumn("__c", lit(1L))
-      .localCheckpoint(false)
+      .withColumn("__c", lit(1L)))
     corpus.join(hits, Seq(idCol), "left")
       .withColumn("contaminated", coalesce(col("__c"), lit(0L)))
       .drop("__c")

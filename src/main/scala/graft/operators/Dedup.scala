@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.expressions.{MinHashBands, MinHashFamily}
 import graft.functions.{TextFns, VectorFns}
 
@@ -23,29 +24,6 @@ object Dedup {
   def exact(df: DataFrame, textCol: String, idCol: String): DataFrame =
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
-
-  /** Barrier for a CORPUS-SIZED working set (the one-call pipelines'
-    * exact-deduped `unique` frame, and [[dedupCorpusBy]]'s survivors —
-    * every other checkpoint in this file is candidate/signature-bounded).
-    * Stored serialized-with-disk by default
-    * (`spark.graft.checkpoint.corpusStorageLevel`): the default
-    * deserialized MEMORY_AND_DISK level can thrash executor memory when
-    * the working set approaches corpus scale. Disposition (the
-    * localCheckpoint trade, deliberate): blocks live on executors with
-    * NO lineage fallback, so losing an executor mid-job at 100 TB kills
-    * the job — the recompute-vs-store call here is that re-running the
-    * exact-dedup hash aggregate per downstream consumer (band keys,
-    * verify token sets, the final anti join — 3+ corpus passes) costs
-    * more than one materialization; a deployment that must survive
-    * executor loss should write `unique` to reliable storage (one
-    * parquet round-trip) instead, which is a recovery policy, not an
-    * operator concern. */
-  private def corpusCheckpoint(df: DataFrame): DataFrame = {
-    val lvl = df.sparkSession.conf.get(
-      "spark.graft.checkpoint.corpusStorageLevel", "MEMORY_AND_DISK_SER")
-    df.localCheckpoint(eager = false,
-      storageLevel = org.apache.spark.storage.StorageLevel.fromString(lvl))
-  }
 
   /** MinHash + LSH candidate pairs: `numHashes` md5-minhash components over
     * word-`shingleN`-gram shingles, banded `bands`-wise; docs sharing any
@@ -81,8 +59,7 @@ object Dedup {
     // ONE signature pass: both sides of the band self-join read the same
     // (doc, band) keys; without the barrier the shingle+minhash map stage
     // (the operator's dominant per-row cost) plans — and runs — twice
-    val bandDf = bandKeys(df, textCol, idCol, numHashes, bands, shingleN, family)
-      .localCheckpoint(false)
+    val bandDf = Barrier(bandKeys(df, textCol, idCol, numHashes, bands, shingleN, family))
     val a = bandDf.select(col("doc").as("a_id"), col("band"))
     val b = bandDf.select(col("doc").as("b_id"), col("band"))
     a.join(b, Seq("band")).filter(col("a_id") < col("b_id"))
@@ -147,7 +124,7 @@ object Dedup {
     // candidate join — without a barrier that join (and everything
     // under it) plans and runs four times per action. Materializing the
     // candidate list once is bounded by the candidate count.
-    val p = pairs.localCheckpoint(false)
+    val p = Barrier(pairs)
     // restrict to docs actually named by a candidate pair BEFORE the
     // word explode/aggregate: `docs` may be a whole corpus (the
     // incremental path passes batch ∪ existing) and verification cost
@@ -158,9 +135,8 @@ object Dedup {
     // intersection a-side, b-side) — one barrier stops the corpus
     // semi-join + tokenize from running three times; its size follows
     // the candidate count, not the corpus
-    val wd = cand.select(col(idCol).as("doc"),
-      explode(array_distinct(TextFns.words(col(textCol)))).as("w"))
-      .localCheckpoint(false)
+    val wd = Barrier(cand.select(col(idCol).as("doc"),
+      explode(array_distinct(TextFns.words(col(textCol)))).as("w")))
     val wc = wd.groupBy("doc").agg(count(lit(1)).as("nw"))
     val inter = p
       .join(wd.select(col("doc").as("a_id"), col("w")), Seq("a_id"))
@@ -203,11 +179,10 @@ object Dedup {
     // same barrier discipline as jaccardVerify: `pairs` is read three
     // ways (candIds, outer frame via two joins) and `cand` twice (a/b
     // text sides) — materialize each once, bounded by candidate count
-    val p = pairs.localCheckpoint(false)
+    val p = Barrier(pairs)
     val texts = docs.select(col(idCol).as("__tid"), col(textCol).as("__txt"))
     val candIds = p.select(explode(array(col("a_id"), col("b_id"))).as("__cid")).distinct()
-    val cand = texts.join(candIds, col("__tid") === col("__cid"), "leftsemi")
-      .localCheckpoint(false)
+    val cand = Barrier(texts.join(candIds, col("__tid") === col("__cid"), "leftsemi"))
     val dist =
       if (maxDist == Int.MaxValue) levenshtein(col("__ta"), col("__tb")).cast("long")
       else {
@@ -239,7 +214,7 @@ object Dedup {
     * label := label(label) (path halving), so convergence is
     * O(log diameter) rounds — a 10⁶-long chain resolves in ~20 rounds,
     * each round a bounded number of key-partitioned shuffles. Labels are
-    * `localCheckpoint`ed per round to truncate lineage (mandatory for
+    * behind a [[graft.Barrier]] per round to truncate lineage (mandatory for
     * iterative plans — otherwise round k re-executes rounds 1..k-1).
     *
     * Output: (`outId`, `outCluster`) for every node appearing in `pairs`.
@@ -253,16 +228,15 @@ object Dedup {
     // of every dedup pipeline executed twice (measured: half of q92/q113's
     // edge materialization). Exploding both directions per row reads the
     // pairs exactly once and yields the same edge set.
-    val edges = pairs
+    // reused every round — don't re-run the pair pipeline. Lazy: the
+    // count() gate below is the first action and materializes it, so an
+    // eager barrier here would just be one extra scheduled job
+    val edges = Barrier(pairs
       .select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-      // reused every round — don't re-run the pair pipeline. Lazy: the
-      // count() gate below is the first action and materializes it, so an
-      // eager barrier here would just be one extra scheduled job
-      .localCheckpoint(false)
+      .distinct())
     // Hybrid (guide §1.2 "choose the distributed algorithm"): the verified
     // pair graph is already a huge reduction of the corpus — when it fits
     // on the driver, a local union-find resolves components in one collect
@@ -278,9 +252,8 @@ object Dedup {
         f.dataType == org.apache.spark.sql.types.IntegerType)
     if (integralIds && edges.count() <= maxLocalEdges)
       return resolveClustersLocal(edges, outId, outCluster)
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint()
+    var labels = Barrier(edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label")), eager = true)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
@@ -292,22 +265,22 @@ object Dedup {
       // different projections shuffled on different keys, so without
       // this the edges-join + neighbor-min aggregation (the expensive
       // part of the round) would execute twice per round
-      val stepped = labels.join(nbrMin, Seq("node"), "left")
+      val stepped = Barrier(labels.join(nbrMin, Seq("node"), "left")
         .select(col("node"), col("label").as("old"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        .localCheckpoint()
+          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label")),
+        eager = true)
       // Pointer jump (path halving): label := label(label). Labels are
       // always node ids, so the self-join hits unless label is already a
       // cluster root that only appears as a label — coalesce keeps it.
       // (A giant cluster makes its root label a hot join key late in the
       // run; AQE's skew-join split handles that — rows per distinct key
       // on the RIGHT side are always 1.)
-      val jumped = stepped
+      val jumped = Barrier(stepped
         .join(stepped.select(col("node").as("label"), col("label").as("ll")),
           Seq("label"), "left")
         .select(col("node"), coalesce(col("ll"), col("label")).as("label"),
-          (coalesce(col("ll"), col("label")) =!= col("old")).as("chg"))
-        .localCheckpoint()
+          (coalesce(col("ll"), col("label")) =!= col("old")).as("chg")),
+        eager = true)
       // convergence reads the just-checkpointed partitions — a cheap scan,
       // not another shuffle join against the previous round
       converged = jumped.filter(col("chg")).isEmpty
@@ -438,10 +411,12 @@ object Dedup {
     // `unique` is the working set of every following stage (band keys,
     // verify token sets, the final anti join) — materialize the exact
     // stage once instead of re-running its corpus hash-aggregate + semi
-    // join per consumer
-    val unique = corpusCheckpoint(df.join(
+    // join per consumer. A corpus-sized barrier: executor blocks with no
+    // lineage fallback are the deliberate trade (see [[graft.Barrier]]),
+    // cheaper than re-running the exact stage for 3+ corpus passes
+    val unique = Barrier(df.join(
       exact(df, textCol, idCol).select(col("keep_id").as("__keep")),
-      df(idCol) === col("__keep"), "leftsemi"))
+      df(idCol) === col("__keep"), "leftsemi"), corpus = true)
     dropLosers(unique, verifiedNearDupPairs(unique, textCol, idCol,
       threshold, numHashes, bands, shingleN), idCol)
   }
@@ -479,7 +454,7 @@ object Dedup {
                        parity: Boolean = false): DataFrame = {
     // Stage 1 — exact: drop batch docs matching an existing text, then
     // keep one copy per identical within-batch text (catches short docs
-    // the shingle stages can't see). localCheckpoint: `fresh` anchors
+    // the shingle stages can't see). Barrier: `fresh` anchors
     // the band keys, the verify union, and the final anti join — without
     // it the corpus-wide hash anti-join re-executes for each.
     val existingHashes = existing.select(md5(col(textCol)).as("__eh")).distinct()
@@ -487,15 +462,14 @@ object Dedup {
     // within-batch exact stage and the semi join below), but both reads
     // fuse into `fresh`'s one materialization and the producer is a
     // single hash anti join — measured in r14's interleave, a
-    // localCheckpoint here cost +45% of the whole query (the
+    // barrier here cost +45% of the whole query (the
     // materialize-vs-recompute trade VERDICT r13 flagged: the producer
     // is cheaper than storing and re-reading the text blocks).
     val vsCorpus = newDocs
       .join(existingHashes, md5(newDocs(textCol)) === col("__eh"), "left_anti")
-    val fresh = vsCorpus.join(
+    val fresh = Barrier(vsCorpus.join(
       exact(vsCorpus, textCol, idCol).select(col("keep_id").as("__keep")),
-      vsCorpus(idCol) === col("__keep"), "leftsemi")
-      .localCheckpoint(false)
+      vsCorpus(idCol) === col("__keep"), "leftsemi"))
     // Stage 2 — ONE pair graph across both frames: new×existing pairs
     // from an asymmetric band join plus new×new pairs from the self
     // join, verified together and resolved as one set of connected
@@ -514,8 +488,8 @@ object Dedup {
     // The barrier sits after the a_id rename (lshPairs' sits before
     // it), so this self-join is its own: sharing lshPairs' would move
     // the barrier and re-plan q113's candidate joins.
-    val nb = bandKeys(fresh, textCol, idCol, numHashes, bands, shingleN, family)
-      .select(col("doc").as("a_id"), col("band")).localCheckpoint(false)
+    val nb = Barrier(bandKeys(fresh, textCol, idCol, numHashes, bands, shingleN, family)
+      .select(col("doc").as("a_id"), col("band")))
     val eb = bandKeys(existing, textCol, idCol, numHashes, bands, shingleN, family)
       .select(col("doc").as("b_id"), col("band"))
     val candNE = nb.join(eb, Seq("band")).select("a_id", "b_id").distinct()
@@ -590,7 +564,7 @@ object Dedup {
     // table is vocabulary-sized (Heaps'-law unbounded), far past any
     // broadcast ceiling on a real corpus; hot-token skew lands the same
     // rows in one partition either way.
-    // localCheckpoint: `ordered` is referenced FOUR times below (both
+    // Barrier: `ordered` is referenced FOUR times below (both
     // prefix sides, both verify token-set sides) — without the barrier
     // the tokenize + freq-window + per-doc sort chain plans (and runs)
     // four times (the round-10 plan was 85 nodes with three extra
@@ -599,12 +573,11 @@ object Dedup {
     // ordered-token frame once is strictly cheaper at any scale — it is
     // the operator's working set, read four ways.
     val wWin = org.apache.spark.sql.expressions.Window.partitionBy("w")
-    val ordered = toks
+    val ordered = Barrier(toks
       .withColumn("__f", count(lit(1)).over(wWin))
       .groupBy("doc")
       .agg(sort_array(collect_list(struct(col("__f"), col("w")))).as("__ord"),
-        count(lit(1)).as("__sz"))
-      .localCheckpoint(false)
+        count(lit(1)).as("__sz")))
     val prefixLen = (col("__sz") - ceil(lit(tau) * col("__sz")) + 1).cast("int")
     val prefixes = ordered.select(col("doc"), col("__sz"),
       explode(slice(transform(col("__ord"), s => s.getField("w")), lit(1), prefixLen)).as("pw"))
@@ -671,8 +644,8 @@ object Dedup {
     * also keeps the policy winner per identical text (not min id).
     *
     * The result is materialized once: the survivor frame sits behind the
-    * same lazy corpus barrier as `unique` (stored by the first action,
-    * `spark.graft.checkpoint.corpusStorageLevel`), so every later action
+    * same lazy corpus-level [[graft.Barrier]] as `unique` (stored by the
+    * first action), so every later action
     * on it (a collect, a word count, a downstream checksum) reads the
     * stored rows instead of re-running the loser anti join and its
     * TopKPerKey winner selection. Two consequences: the barrier blocks
@@ -690,13 +663,13 @@ object Dedup {
         Seq("__h"), Seq(graft.plans.TopK.desc("__ord"), graft.plans.TopK.asc("doc_id")), k = 1)
       .select(col("doc_id").as("__keep"))
     // the shared working set — same corpus-sized barrier as dedupCorpus
-    val unique = corpusCheckpoint(
-      df.join(exactWinners, df(idCol) === col("__keep"), "leftsemi"))
+    val unique = Barrier(
+      df.join(exactWinners, df(idCol) === col("__keep"), "leftsemi"), corpus = true)
     val verified = verifiedNearDupPairs(unique, textCol, idCol,
       threshold, numHashes, bands, shingleN)
     val losers = survivorsBy(unique, verified, idCol, orderCol)
       .filter(col("keep") === 0L).select("doc_id")
-    corpusCheckpoint(unique.join(losers, unique(idCol) === losers("doc_id"), "left_anti"))
+    Barrier(unique.join(losers, unique(idCol) === losers("doc_id"), "left_anti"), corpus = true)
   }
 
   /** Packed-label bit width sized from a codebook's max `cluster` id —
@@ -746,8 +719,7 @@ object Dedup {
                   threshold: Double, bits: Int = 4, tables: Int = 1): DataFrame =
     // one bucketing pass feeds both self-join sides (same barrier as
     // minhashLsh's band keys)
-    bucketPairs(embeddingBuckets(df, vecCol, idCol, bits, tables).localCheckpoint(false),
-      threshold, tables)
+    bucketPairs(Barrier(embeddingBuckets(df, vecCol, idCol, bits, tables)), threshold, tables)
 
   /** (a_id, b_id, cosine) pairs (a_id < b_id, deduped across tables) of
     * the vectors sharing a bucket in an (id, vec, bucket) frame, cosine
@@ -790,8 +762,7 @@ object Dedup {
                                   bits: Int = 4, tables: Int = 1): DataFrame = {
     // ONE bucketing pass over the batch serves the asymmetric join AND
     // the within-batch self join (the dedupIncremental band-key pattern)
-    val nbk = embeddingBuckets(newDocs, vecCol, idCol, bits, tables)
-      .localCheckpoint(false)
+    val nbk = Barrier(embeddingBuckets(newDocs, vecCol, idCol, bits, tables))
     val nb = nbk.select(col("id").as("a_id"), col("vec").as("a_vec"), col("bucket"))
     val eb = embeddingBuckets(existing, vecCol, idCol, bits, tables)
       .select(col("id").as("b_id"), col("vec").as("b_vec"), col("bucket"))
@@ -828,16 +799,15 @@ object Dedup {
       s"pigeonhole recall guarantee needs maxDist < bands (got $maxDist >= $bands)")
     val width = 64 / bands
     val mask = if (width == 64) -1L else (1L << width) - 1
-    val keyed = df
+    // one fingerprint pass feeds both self-join sides: the upstream
+    // hash computation (SimHash/pHash per row) must not run twice
+    val keyed = Barrier(df
       .select(col(idCol).as("id"), col(hashCol).cast("long").as("h"))
       .select(col("id"), col("h"), explode(array((0 until bands).map { i =>
         struct(lit(i).as("band"),
           shiftright(col("h"), i * width).bitwiseAND(lit(mask)).as("key"))
       }: _*)).as("bk"))
-      .select(col("id"), col("h"), col("bk.band").as("band"), col("bk.key").as("key"))
-      // one fingerprint pass feeds both self-join sides: the upstream
-      // hash computation (SimHash/pHash per row) must not run twice
-      .localCheckpoint(false)
+      .select(col("id"), col("h"), col("bk.band").as("band"), col("bk.key").as("key")))
     val a = keyed.select(col("id").as("a_id"), col("h").as("a_h"), col("band"), col("key"))
     val b = keyed.select(col("id").as("b_id"), col("h").as("b_h"), col("band"), col("key"))
     // popcount-filter BEFORE the pair dedup: dist is computable from
@@ -899,7 +869,7 @@ object Dedup {
     * feeds both self-join sides: materialize it once rather than running
     * the nearest-centroid scan twice. */
   private def pairsFromAssigned(assigned: DataFrame, threshold: Double): DataFrame = {
-    val once = assigned.localCheckpoint(false)
+    val once = Barrier(assigned)
     val a = once.select(col("cluster"), col("id").as("a_id"), col("vec").as("a_vec"))
     val b = once.select(col("cluster"), col("id").as("b_id"), col("vec").as("b_vec"))
     a.join(b, Seq("cluster")).filter(col("a_id") < col("b_id"))
@@ -1002,8 +972,8 @@ object Dedup {
     *
     * The centroid frame is evaluated SEVERAL times here (count, coarse
     * fit passes, cell keying, the non-empty-cell collect, plus the
-    * auto-bits agg when `clusterBits` is left 0) — cache/localCheckpoint
-    * expensively-derived codebooks before calling, and pass
+    * auto-bits agg when `clusterBits` is left 0) — put expensively-derived
+    * codebooks behind a [[graft.Barrier]] before calling, and pass
     * `clusterBits` when the caller already knows k ([[semanticDedup]]
     * forwards its labelBits). */
   def assignNearestTwoLevel(df: DataFrame, vecCol: String, idCol: String,
@@ -1082,8 +1052,8 @@ object Dedup {
     * two-level path's packed-label width (the flat path packs no label):
     * it must cover the codebook's max cluster id (an undersized value
     * throws loudly from ArgMaxPack, never a silent wrong argmax) — leave
-    * it 0 to auto-size from the codebook (one tiny agg; cache/
-    * localCheckpoint an expensively-derived centroid frame first), or
+    * it 0 to auto-size from the codebook (one tiny agg; put an
+    * expensively-derived centroid frame behind a [[graft.Barrier]] first), or
     * pass the known width as [[semanticDedupAuto]] does from k. */
   def semanticDedup(df: DataFrame, vecCol: String, idCol: String,
                     centroids: DataFrame, threshold: Double,

@@ -64,9 +64,8 @@ object Dsir {
     // dominant per-row cost) plans and runs twice. The materialized
     // frame is docs × ≤buckets rows, not the corpus-sized stream the
     // old stream-twice disposition refused to store.
-    val fb = features(raw, textCol, idCol, buckets)
-      .groupBy("doc", "b").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+    val fb = graft.Barrier(features(raw, textCol, idCol, buckets)
+      .groupBy("doc", "b").agg(count(lit(1)).as("cnt")))
     val rc = fb.groupBy("b").agg(sum(col("cnt")).as("cr"))
     val counts = tc.join(rc, Seq("b"), "full_outer")
       .select(col("b"),

@@ -296,7 +296,7 @@ object IvfPq {
     // probes is read twice (the ADC-table chain and the candidate join)
     // and its producer includes the CALLER's whole queries plan — a lazy
     // barrier, bounded by queries × nprobe rows, runs that plan once
-    val probed = probes.localCheckpoint(false)
+    val probed = graft.Barrier(probes)
 
     // residual query per probed cluster → per-subspace ADC lookup table:
     // (q_id, cluster, subspace, code) → squared distance contribution

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * fresh LocalRelation — so the plan never grows with the iteration
   * count and round k never re-executes rounds 1..k-1 (the
   * cache-chain/lineage trap iterative DataFrame loops fall into; see
-  * Dedup.resolveClusters' localCheckpoint note for the partner pattern
+  * Dedup.resolveClusters' per-round [[graft.Barrier]] for the partner pattern
   * when state must stay distributed). Assignment is a per-row argmin
   * via the packed-long ArgMaxPack HASH aggregate, the update is one
   * map-side-combining decimal-mean aggregate, and exactly one job runs

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** N-gram language-model quality scoring (SURVEY.md §2.C) — the rung above
   * surface heuristics (q35) on the quality ladder: score each document by
   * its average log-probability under a word-bigram model trained on a
@@ -43,27 +45,24 @@ object LangModel {
     * driver-side value is `vocab` (a scalar count — unavoidable and
     * cheap); the count tables stay distributed. */
   def train(corpus: DataFrame, textCol: String): Model = {
-    // localCheckpoint on `bigrams`: it is read twice per scoring pass
+    // A [[graft.Barrier]] on `bigrams`: it is read twice per scoring pass
     // (bigram join + context aggregate) and without a barrier each
     // reference re-tokenizes the training corpus (Spark does not CSE
     // duplicated subtrees — the q80 similarityJoin lesson). `unigrams`
     // is read exactly once (the vocab scalar) — no barrier can help it.
-    // localCheckpoint, not persist: persist would alias identical plans
+    // A barrier, not persist: persist would alias identical plans
     // through the CacheManager ACROSS train() calls — a same-session
     // re-train would silently reuse (possibly stale) cached counts and
     // a benchmark rerun would measure cache hits, not the model build —
     // and it needs an unpersist lifecycle no lazy caller owns. The
     // trade: lineage truncation means a lost executor breaks a
-    // long-lived Model; a deployment holding Models across sessions
-    // should instead checkpoint to reliable storage (or persist and own
-    // the unpersist), which is a deployment policy, not this builder's.
+    // long-lived Model (the trade the Barrier scaladoc states).
     val words = corpus.select(posexplode(split(col(textCol), " ")).as(Seq("__p", "w")))
     val unigrams = words.groupBy("w").agg(count(lit(1)).as("c"))
-    val bigrams = corpus
+    val bigrams = Barrier(corpus
       .select(explode(bigramArray(textCol)).as("bg"))
       .select(col("bg.w_prev").as("w_prev"), col("bg.w").as("w"))
-      .groupBy("w_prev", "w").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .groupBy("w_prev", "w").agg(count(lit(1)).as("c")))
     Model(unigrams, bigrams, unigrams.count())
   }
 
@@ -132,16 +131,15 @@ object LangModel {
     val uni = corpus
       .select(explode(split(col(textCol), " ")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
-    val bi = corpus
+    // read twice — by the eager N scalar below and by the PMI query
+    // itself — and its producer is a full corpus tokenize+explode+
+    // shuffle; the lazy barrier (materialized by the N aggregate, which
+    // touches every partition) runs it once. Bounded by the distinct
+    // bigram count, not the corpus.
+    val bi = Barrier(corpus
       .select(explode(bigramArray(textCol)).as("bg"))
       .select(col("bg.w_prev").as("w_prev"), col("bg.w").as("w"))
-      .groupBy("w_prev", "w").agg(count(lit(1)).as("c_pair"))
-      // read twice — by the eager N scalar below and by the PMI query
-      // itself — and its producer is a full corpus tokenize+explode+
-      // shuffle; the lazy barrier (materialized by the N aggregate, which
-      // touches every partition) runs it once. Bounded by the distinct
-      // bigram count, not the corpus.
-      .localCheckpoint(false)
+      .groupBy("w_prev", "w").agg(count(lit(1)).as("c_pair")))
     // sum over an empty frame is NULL, not 0 — a corpus with no bigrams
     // (all docs < 2 words) must return an empty result, not NPE
     val nRow = bi.agg(sum(col("c_pair"))).head()

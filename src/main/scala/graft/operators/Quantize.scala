@@ -153,7 +153,7 @@ object Quantize {
       // lazy plan would silently recompute every subvector pass per
       // consumer — while never unpersisting (the previous shape) leaked
       // the cache across the whole session (and across timed bench runs)
-      trained.localCheckpoint(eager = true)
+      graft.Barrier(trained, eager = true)
     } finally { subs.unpersist(); () }
   }
 

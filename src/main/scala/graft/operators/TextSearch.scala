@@ -60,14 +60,13 @@ object TextSearch {
     // term) tf. dl is functionally dependent on doc_id; grouping by it
     // avoids a join back to the doc table.
     // tf feeds BOTH the document-frequency aggregate and the scoring
-    // join; a lazy checkpoint (bounded by posting-list hits — the
+    // join; a lazy barrier (bounded by posting-list hits — the
     // query-term filter keeps it structurally small) stops the corpus
     // explode + semi-filter from running twice per action
-    val tf = d.select(col("doc_id"), col("dl"), explode(col("__ws")).as("__t"))
+    val tf = graft.Barrier(d.select(col("doc_id"), col("dl"), explode(col("__ws")).as("__t"))
       .join(broadcast(terms), Seq("__t"), "inner")
       .groupBy("doc_id", "dl", "__t")
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+      .agg(count(lit(1)).as("tf")))
 
     val dfreq = tf.groupBy("__t").agg(count(lit(1)).as("df"))
 

@@ -580,7 +580,7 @@ object SignalQueries {
       // ids would disagree between the copies. The dict join is null-SAFE
       // (<=>) so a null priority keeps its pair rows and surfaces as the
       // null group, exactly as the direct groupBy would. Deliberately NOT
-      // localCheckpointed (which would also lift the pure-function
+      // put behind a Barrier (which would also lift the pure-function
       // constraint): the duplicated subtree is one orders scan + a 5-row
       // distinct (~0.3 s at sf1 against the 7.4 s query), while an eager
       // barrier adds a whole scheduled job to every run including the

@@ -754,12 +754,12 @@ object VectorQueries {
       val cb = graft.operators.Quantize
         .trainCodebook(base, "vec_id", "embedding", m, dim, k = 16, iters = 2)
       // k·m = 128 rows in a LocalRelation — reused by encode + both ADC
-      // sides with no lineage to pin (former localCheckpoint removed).
+      // sides with no lineage to pin (former barrier removed).
       // `enc` itself feeds BOTH adcTopK and the code_key aggregate — the
       // lazy barrier keeps the per-row encode projection to one corpus
       // pass (Spark does not CSE the duplicated subtree)
-      val enc = graft.operators.Quantize.encode(base, "vec_id", "embedding", cb, m, dim)
-        .localCheckpoint(false)
+      val enc = graft.Barrier(
+        graft.operators.Quantize.encode(base, "vec_id", "embedding", cb, m, dim))
       val q0 = base
         .join(broadcast(base.agg(min(col("vec_id")).as("vec_id"))), Seq("vec_id"))
         .select("vec_id", "embedding")
@@ -881,7 +881,7 @@ object VectorQueries {
         e, "embedding", "vec_id", "label", targetClusterSize = 25)
       // the two-level path evaluates the codebook several times (count,
       // coarse fit, cell keying, non-empty collect) — pin it once
-      val cents = centroids.localCheckpoint(false)
+      val cents = graft.Barrier(centroids)
       val flat = graft.operators.Dedup
         .assignNearest(e, "embedding", "vec_id", cents)
         .select(col("id").as("vec_id"), col("cluster").as("flat_cl"))
@@ -1093,15 +1093,14 @@ object VectorQueries {
       val base = Tables.embeddings(s, dir, spread = true)
         .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
       // trainCodebook's driver loop returns LocalRelation codebooks —
-      // already materialized, nothing to pin (the former localCheckpoint
+      // already materialized, nothing to pin (the former barrier
       // copies cost two barrier jobs for frames with no lineage to cut)
       val model = graft.operators.IvfPq.train(base, "vec_id", "embedding",
         dim = 64, nlist = 8, m = 4, k = 16, iters = 2)
       // `enc` feeds BOTH the probe search and the code_key aggregate —
       // without a barrier the per-row encode projection (m NearestCentroid
       // loops over the whole corpus) plans and runs twice
-      val enc = graft.operators.IvfPq.encode(base, "vec_id", "embedding", model)
-        .localCheckpoint(false)
+      val enc = graft.Barrier(graft.operators.IvfPq.encode(base, "vec_id", "embedding", model))
       val q0 = base
         .join(broadcast(base.agg(min(col("vec_id")).as("vec_id"))), Seq("vec_id"))
         .select("vec_id", "embedding")

@@ -435,4 +435,195 @@ class NativeExprParitySpec extends SparkSpec {
       assert(result.passed, s"$mode: $result")
     }
   }
+
+  /** `rows` under `schema` as an RDD-backed frame in two partitions. */
+  private def rddFrame(schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+
+  /** Asserts `prop` holds for 12 generated batches with `seed`. */
+  private def check(mode: String, seed: Long)(prop: org.scalacheck.Prop): Unit = {
+    import org.scalacheck.{Test => Check}
+    import org.scalacheck.rng.Seed
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(12)
+      .withInitialSeed(Seed(seed)).withWorkers(1), prop)
+    assert(result.passed, s"$mode: $result")
+  }
+
+  private def rawBits(d: Any): Option[Long] =
+    Option(d).map(x => java.lang.Double.doubleToRawLongBits(x.asInstanceOf[Double]))
+
+  /** Random vectors of `dim` doubles, sometimes null, ragged or holding a
+    * null element (all null cases of the vector expressions). */
+  private def vectors(dim: Int) = {
+    import org.scalacheck.Gen
+    val v = Gen.listOfN(dim, Gen.choose(-2.0, 2.0))
+    Gen.frequency[Seq[Any]](
+      12 -> v, 1 -> Gen.const(null), 1 -> Gen.listOfN(dim + 1, Gen.choose(-2.0, 2.0)),
+      1 -> v.map(xs => xs.updated(0, null)))
+  }
+
+  test("ArgMaxPack codegen'd and interpreted: max(packed) per key is the (score, label) argmax (scalacheck)") {
+    import org.scalacheck.{Gen, Prop}
+    import graft.expressions.ArgMaxPack
+    val schema = StructType(Seq(StructField("k", IntegerType),
+      StructField("score", DoubleType), StructField("lbl", IntegerType)))
+    // scores on a 1/64 grid: exact ties are common, distinct scores far
+    // apart from the packing's quantization; nulls in either input
+    val score = Gen.frequency[Any](10 -> Gen.choose(-64, 64).map(_ / 64.0), 1 -> Gen.const(null))
+    val row = Gen.zip(Gen.choose(0, 5), score, Gen.frequency[Any](10 -> Gen.choose(0, 15), 1 -> Gen.const(null)))
+    inBothCodegenModes { mode =>
+      check(mode, 8L)(Prop.forAllNoShrink(Gen.listOfN(60, row)) { rows =>
+        val df = rddFrame(schema, rows.map { case (k, s, l) => Row(k, s, l) })
+        val got = df.groupBy("k").agg(max(ArgMaxPack.of(col("score"), col("lbl"), 4)).as("p"))
+          .select(col("k"), ArgMaxPack.unpackLabel(col("p"), 4)).collect()
+          .map(r => r.getInt(0) -> Option(r.get(1))).toMap
+        val want = rows.groupBy(_._1).map { case (k, rs) =>
+          val scored = rs.collect { case (_, s: Double, l: Int) => (s, l) }
+          k -> scored.reduceOption((a, b) =>
+            if (b._1 > a._1 || (b._1 == a._1 && b._2 > a._2)) b else a).map(_._2)
+        }
+        got == want
+      })
+    }
+  }
+
+  test("DotProduct codegen'd and interpreted both equal the sequential fold bit for bit (scalacheck)") {
+    import org.scalacheck.{Gen, Prop}
+    import graft.expressions.DotProduct
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("a", ArrayType(DoubleType)), StructField("b", ArrayType(DoubleType))))
+    def fold(a: Seq[Any], b: Seq[Any]): Option[Double] =
+      if (a == null || b == null || a.size != b.size || (a ++ b).contains(null)) None
+      else Some(a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x.asInstanceOf[Double] * y.asInstanceOf[Double] })
+    val pairs = Gen.choose(1, 40).flatMap(d => Gen.listOfN(30, Gen.zip(vectors(d), vectors(d))))
+    inBothCodegenModes { mode =>
+      check(mode, 9L)(Prop.forAllNoShrink(pairs) { ps =>
+        val df = rddFrame(schema, ps.zipWithIndex.map { case ((a, b), i) => Row(i, a, b) })
+        // float inputs widen exactly, so the float path folds the same doubles
+        val got = df.select(col("id"), DotProduct.of(col("a"), col("b")),
+            DotProduct.of(col("a").cast("array<float>"), col("b")))
+          .collect().map(r => r.getInt(0) -> ((rawBits(r.get(1)), rawBits(r.get(2))))).toMap
+        ps.zipWithIndex.forall { case ((a, b), i) =>
+          val f = if (a == null) null else a.map(x => if (x == null) null else x.asInstanceOf[Double].toFloat.toDouble)
+          got(i) == ((fold(a, b).flatMap(rawBits), fold(f, b).flatMap(rawBits)))
+        }
+      })
+    }
+  }
+
+  /** A random codebook: `k` centroids of `dim` doubles, codes shuffled,
+    * with a duplicated centroid so exact metric ties occur. */
+  private def codebooks(dim: Int) = {
+    import org.scalacheck.Gen
+    for {
+      k <- Gen.choose(1, 12)
+      cents <- Gen.listOfN(k, Gen.listOfN(dim, Gen.choose(-2.0, 2.0)))
+      codes <- Gen.pick(k + 1, 0 until 100)
+    } yield ((cents :+ cents.head).map(_.toArray).toArray, codes.toArray)
+  }
+
+  private def sqDist(v: Seq[Double], c: Array[Double]): Double = {
+    val dot = (a: Seq[Double], b: Seq[Double]) => a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+    dot(v, v) - 2.0 * dot(v, c.toSeq) + dot(c.toSeq, c.toSeq)
+  }
+
+  private def vecFrame(vs: Seq[Seq[Any]]): DataFrame =
+    rddFrame(StructType(Seq(StructField("id", IntegerType), StructField("v", ArrayType(DoubleType)))),
+      vs.zipWithIndex.map { case (v, i) => Row(i, v) })
+
+  /** A vector with no null element and the codebook's `dim`, as doubles. */
+  private def clean(v: Seq[Any], dim: Int): Option[Seq[Double]] =
+    Option(v).filter(xs => xs.size == dim && !xs.contains(null)).map(_.map(_.asInstanceOf[Double]))
+
+  test("NearestCentroid codegen'd and interpreted both equal a brute-force argmax/argmin (scalacheck)") {
+    import org.scalacheck.{Gen, Prop}
+    import graft.expressions.NearestCentroid
+    val batches = for {
+      dim <- Gen.choose(1, 16)
+      cb <- codebooks(dim)
+      vs <- Gen.listOfN(30, vectors(dim))
+    } yield (dim, cb, vs)
+    inBothCodegenModes { mode =>
+      check(mode, 10L)(Prop.forAllNoShrink(batches) { case (dim, (cents, codes), vs) =>
+        val got = vecFrame(vs).select(col("id"),
+            NearestCentroid.cosine(col("v"), cents, codes).as("c"),
+            NearestCentroid.l2(col("v"), cents, codes).as("l"))
+          .collect().map { r =>
+            def pick(i: Int) = Option(r.getStruct(i)).map(s => (rawBits(s.getDouble(0)), s.getInt(1)))
+            r.getInt(0) -> ((pick(1), pick(2)))
+          }.toMap
+        vs.zipWithIndex.forall { case (v, i) =>
+          val want = clean(v, dim).map { x =>
+            val nrm = math.sqrt(x.foldLeft(0.0)((s, y) => s + y * y))
+            val cos = cents.indices.map { c =>
+              val dvc = x.zip(cents(c)).foldLeft(0.0) { case (s, (p, q)) => s + p * q }
+              val nc = math.sqrt(cents(c).foldLeft(0.0)((s, y) => s + y * y))
+              (dvc / (nrm * nc), codes(c))
+            }
+            // first maximum in the codebook walk; bit-equal ties to the larger id
+            val best = cos.reduceLeft((b, n) => if (n._1 > b._1 || (n._1 == b._1 && n._2 > b._2)) n else b)
+            val d2 = cents.indices.map(c => (sqDist(x, cents(c)), codes(c)))
+            val near = d2.reduceLeft((b, n) => if (n._1 < b._1 || (n._1 == b._1 && n._2 < b._2)) n else b)
+            (Some((rawBits(best._1), best._2)), Some((rawBits(near._1), near._2)))
+          }.getOrElse((None, None))
+          got(i) == want
+        }
+      })
+    }
+  }
+
+  test("NearestCentroidsTopN codegen'd and interpreted both equal a full sort's first n (scalacheck)") {
+    import org.scalacheck.{Gen, Prop}
+    import graft.expressions.NearestCentroidsTopN
+    val batches = for {
+      dim <- Gen.choose(1, 16)
+      cb <- codebooks(dim)
+      n <- Gen.choose(1, 16)
+      vs <- Gen.listOfN(30, vectors(dim))
+    } yield (dim, cb, n, vs)
+    inBothCodegenModes { mode =>
+      check(mode, 11L)(Prop.forAllNoShrink(batches) { case (dim, (cents, codes), n, vs) =>
+        val got = vecFrame(vs).select(col("id"), NearestCentroidsTopN.l2(col("v"), cents, codes, n))
+          .collect().map(r => r.getInt(0) -> Option(r.getSeq[Int](1)).map(_.toSeq)).toMap
+        vs.zipWithIndex.forall { case (v, i) =>
+          got(i) == clean(v, dim).map { x =>
+            cents.indices.map(c => (sqDist(x, cents(c)), codes(c)))
+              .sortWith { case ((d1, c1), (d2, c2)) =>
+                val cd = java.lang.Double.compare(d1, d2)
+                cd < 0 || (cd == 0 && c1 < c2)
+              }.take(n).map(_._2)
+          }
+        }
+      })
+    }
+  }
+
+  test("NormalizeText codegen'd and interpreted both equal NFC + lowercase + whitespace collapse (scalacheck)") {
+    import org.scalacheck.{Gen, Prop}
+    import graft.expressions.NormalizeText
+    // composed and decomposed accents, title/dotted capitals, astral
+    // letters, tabs/newlines, NUL and other controls, NBSP (not Java
+    // whitespace), CJK
+    val pieces = Gen.oneOf("Café", "café", "ǅ", "İstanbul", "𝔘x", " ", "  ",
+      "\t", "\n", "\u0000", "\u001f", " ", "日本語", "WORD", "a", "")
+    val texts = Gen.frequency[String](1 -> Gen.const(null),
+      9 -> Gen.choose(0, 10).flatMap(k => Gen.listOfN(k, pieces)).map(_.mkString))
+    def reference(s: String): String = {
+      val nfc = java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC)
+        .toLowerCase(java.util.Locale.ROOT)
+      val spaced = nfc.codePoints().toArray.toSeq.flatMap { cp =>
+        if (Character.isWhitespace(cp)) " "
+        else if (Character.isISOControl(cp)) ""
+        else new String(Character.toChars(cp))
+      }.mkString
+      spaced.split(" ").filter(_.nonEmpty).mkString(" ")
+    }
+    inBothCodegenModes { mode =>
+      check(mode, 12L)(Prop.forAllNoShrink(Gen.listOfN(40, texts)) { ts =>
+        val got = textFrame(ts).select(col("id"), NormalizeText.of(col("text"))).collect()
+          .map(r => r.getInt(0) -> Option(r.getString(1))).toMap
+        ts.zipWithIndex.forall { case (t, i) => got(i) == Option(t).map(reference) }
+      })
+    }
+  }
 }

@@ -1,16 +1,21 @@
 #!/usr/bin/env python3
 """Plan-identity diff of two graft.Explain dumps.
 
-Usage: python3 tools/same_plans.py <explainA.md> <explainB.md> [query ...]
+Usage: python3 tools/same_plans.py [--top-only] <explainA.md> <explainB.md> [query ...]
 
 The plan counterpart of tools/same_outputs.py. Each dump holds one
 `## <query>` section per catalog query with its formatted physical plan
-(`runMain graft.Explain <sfDir> <out.md>`). Before comparing, each
-section's run-specific numbering is renumbered by first appearance:
+(`runMain graft.Explain <sfDir> <out.md>`), followed by one
+`### Below barrier RDD[N]` subsection per `graft.Barrier` built while
+planning the query, holding that barrier's producer plan. Both parts are
+compared; `--top-only` drops the subsections first, to compare against a
+dump that has none. Before comparing, each section's run-specific
+numbering is renumbered by first appearance, subsections included:
 
 - expression ids (`text#746`, `count#12L`);
-- RDD ids (`MapPartitionsRDD[87]`) and the source line of the call
-  site that created the RDD (`at localCheckpoint at Dedup.scala:518`);
+- RDD ids (`MapPartitionsRDD[87]`, `### Below barrier RDD[87]`) and the
+  source line of the call site that created the RDD
+  (`at localCheckpoint at Dedup.scala:518`);
 - operator ids (`(12)` node labels, `[codegen id : 3]`,
   `operator id = 5`, `Reuses operator id: 12`, `[plan_id=401]`);
 - JVM object identities, which differ per run: identity hash codes
@@ -41,17 +46,23 @@ LAMBDA = re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+")
 IDENTITY = re.compile(r"(?<=[\w\[;$])@[0-9a-f]{1,8}\b")
 
 
-def sections(path):
-    """query name -> its plan text."""
+BELOW = "### Below barrier "
+
+
+def sections(path, top_only=False):
+    """query name -> its plan text (without the below-barrier
+    subsections if `top_only`)."""
     out, name, lines = {}, None, []
     with open(path) as f:
         for line in f:
             if line.startswith("## "):
                 if name is not None:
                     out[name] = "".join(lines)
-                name, lines = line[3:].strip(), []
+                name, lines, below = line[3:].strip(), [], False
             elif name is not None:
-                lines.append(line)
+                below = below or (top_only and line.startswith(BELOW))
+                if not below:
+                    lines.append(line)
     if name is not None:
         out[name] = "".join(lines)
     return out
@@ -84,10 +95,13 @@ def first_difference(a, b):
 
 
 def main():
-    if len(sys.argv) < 3:
+    args = sys.argv[1:]
+    top_only = "--top-only" in args
+    args = [x for x in args if x != "--top-only"]
+    if len(args) < 2:
         sys.exit(__doc__)
-    a, b = sections(sys.argv[1]), sections(sys.argv[2])
-    queries = sys.argv[3:] or sorted(set(a) | set(b))
+    a, b = sections(args[0], top_only), sections(args[1], top_only)
+    queries = args[2:] or sorted(set(a) | set(b))
     bad = 0
     for q in queries:
         if q not in a or q not in b:
